@@ -49,6 +49,27 @@ def norm2_quantized(a: Column) -> Column:
     )
 
 
+def _score_rows(vec: Column, matrix, term, zero: Column) -> Column:
+    """Fold ``vec`` against every row of a matrix: ``transform(matrix,
+    row -> aggregate(zip_with(vec, row, term), zero, (acc, x) -> acc +
+    x))``. A Python matrix becomes ONE parsed SQL literal; a Column is an
+    outer lambda's variable. Either way the fold is ONE lambda tree, so
+    the build costs a fixed couple of hundred py4j calls whatever the
+    row count (one unrolled fold per row cost ~170 calls each: ~43k for
+    e9's 8×16 encoder plus its query tables). Per row the arithmetic is
+    the unrolled form's: same ``term``, same typed ``zero``, same
+    left-to-right sum, so results are bit-identical.
+    """
+    if not isinstance(matrix, Column):
+        matrix = F.expr(_sql_literal(matrix))
+    return F.transform(
+        matrix,
+        lambda row: F.aggregate(
+            F.zip_with(vec, row, term), zero, lambda acc, x: acc + x
+        ),
+    )
+
+
 def cosine_quantized(a: Column, b: Column) -> Column:
     """Deterministic cosine: exact integer dot / sqrt(exact norms)."""
     return dot_quantized(a, b).cast("double") / (
@@ -586,36 +607,60 @@ def pq_train(
     return books
 
 
+def _pq_dists(vec: Column, codebooks: "list") -> Column:
+    """The m×k table of exact squared L2 distances from each subvector
+    of ``vec`` to its subspace's centroids (``array<array<double>>``):
+    the encoder's argmin input and, for a query, its ADC lookup table.
+    One transform over the whole m×k×sub codebook literal."""
+    sub = len(codebooks[0][0])
+    books = [[[float(v) for v in c] for c in book] for book in codebooks]
+    return F.transform(
+        F.expr(_sql_literal(books)),
+        lambda book, s: _score_rows(
+            F.slice(vec, s * sub + 1, sub),
+            book,
+            lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
+            F.lit(0.0),
+        ),
+    )
+
+
 def pq_encode(vec: Column, codebooks: "list") -> Column:
     """Encode a vector to ``m`` int8 codes: per subspace, argmin L2 to the
-    codebook centroids — pure column algebra (slice + fold argmin over k
-    literal centroids); ties break toward the lower code, matching
+    codebook centroids — pure column algebra (argmin over each row of
+    the `_pq_dists` table); ties break toward the lower code
+    (``array_position`` finds the first minimum), matching
     pq_train. m bytes per vector (64-dim float32 → 8 bytes = 32×)."""
-    m = len(codebooks)
-    k = len(codebooks[0])
-    sub = len(codebooks[0][0])
-    codes = []
-    # codebook rows as ONE parsed SQL array literal each, not m·k·sub
-    # F.lit py4j round trips per encode build (round-13; ~2048 calls at
-    # the default 8×16×16 — the util.local_rows lesson)
+    return F.transform(
+        _pq_dists(vec, codebooks),
+        lambda d: (F.array_position(d, F.array_min(d)) - 1).cast("int"),
+    )
+
+
+def _adc_dist(m: int) -> Column:
+    """ADC distance of a row's ``__code`` under a query's ``__lut``: the
+    m looked-up subspace distances summed left to right."""
+    dist = None
     for s in range(m):
-        subv = F.slice(vec, s * sub + 1, sub)
-        dists = F.array(
-            *[
-                F.aggregate(
-                    F.zip_with(
-                        subv,
-                        F.expr(_sql_literal([float(v) for v in codebooks[s][c]])),
-                        lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                for c in range(k)
-            ]
+        term = F.element_at(
+            F.element_at("__lut", s + 1), F.element_at("__code", s + 1) + 1
         )
-        codes.append((F.array_position(dists, F.array_min(dists)) - 1).cast("int"))
-    return F.array(*codes)
+        dist = term if dist is None else dist + term
+    return dist
+
+
+def _nearest_k(
+    scored: DataFrame, k: int, dist_col: str, id_col: str, query_id_col: str
+) -> DataFrame:
+    """Keep each query's ``k`` smallest distances; ties break on id."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(query_id_col).orderBy(F.asc(dist_col), F.asc(id_col))
+    return (
+        scored.withColumn("__rank", F.row_number().over(w))
+        .filter(F.col("__rank") <= k)
+        .drop("__rank")
+    )
 
 
 def pq_topk(
@@ -629,58 +674,23 @@ def pq_topk(
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k: the corpus is scored through its
     PQ codes only — per query, a (m × k) lookup table of exact
-    query-subvector→centroid distances is built as literal arrays, and
-    each corpus row costs m ``element_at`` lookups + a sum. The corpus
-    streams once (codes can be precomputed and cached at 32× compression);
-    the query table rides the broadcast. Ties break on id."""
-    from pyspark.sql import Window
-
-    m = len(codebooks)
+    query-subvector→centroid distances (`_pq_dists`, the encoder's own
+    distance table), and each corpus row costs m ``element_at`` lookups
+    + a sum. The corpus streams once (codes can be precomputed and cached
+    at 32× compression); the query table rides the broadcast. Ties break
+    on id."""
     corp = ensure_parallelism(df, id_col).select(
         F.col(id_col), pq_encode(F.col(vec_col), codebooks).alias("__code")
     )
     q = F.broadcast(
         query.select(
-            F.col(query_id_col),
-            *[
-                F.array(
-                    *[
-                        F.aggregate(
-                            F.zip_with(
-                                F.slice(
-                                    F.col(vec_col),
-                                    s * len(codebooks[0][0]) + 1,
-                                    len(codebooks[0][0]),
-                                ),
-                                F.expr(_sql_literal(
-                                    [float(v) for v in codebooks[s][c]]
-                                )),
-                                lambda a, b: (a.cast("double") - b)
-                                * (a.cast("double") - b),
-                            ),
-                            F.lit(0.0),
-                            lambda acc, x: acc + x,
-                        )
-                        for c in range(len(codebooks[0]))
-                    ]
-                ).alias(f"__lut{s}")
-                for s in range(m)
-            ],
+            F.col(query_id_col), _pq_dists(F.col(vec_col), codebooks).alias("__lut")
         )
     )
-    dist = None
-    for s in range(m):
-        term = F.element_at(F.col(f"__lut{s}"), F.element_at("__code", s + 1) + 1)
-        dist = term if dist is None else dist + term
     scored = corp.crossJoin(q).select(
-        query_id_col, id_col, dist.alias("pq_dist")
+        query_id_col, id_col, _adc_dist(len(codebooks)).alias("pq_dist")
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.asc("pq_dist"), F.asc(id_col))
-    return (
-        scored.withColumn("__rank", F.row_number().over(w))
-        .filter(F.col("__rank") <= k)
-        .drop("__rank")
-    )
+    return _nearest_k(scored, k, "pq_dist", id_col, query_id_col)
 
 
 def pq_train_quantized(
@@ -793,8 +803,6 @@ def pq_topk_quantized(
     per-row score is m ``element_at`` lookups summed into one BIGINT.
     Every distance is an exact integer, so the whole path — codes, LUTs,
     scores, (dist, id)-tie-broken top-k — is bit-reproducible in SQL."""
-    from pyspark.sql import Window
-
     from .clustering import quantize_shifted
 
     m = len(codebooks)
@@ -835,14 +843,7 @@ def pq_topk_quantized(
     scored = corp.crossJoin(qx).select(
         query_id_col, id_col, dist.alias("adc_dist2")
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.asc("adc_dist2"), F.asc(id_col)
-    )
-    return (
-        scored.withColumn("__rank", F.row_number().over(w))
-        .filter(F.col("__rank") <= k)
-        .drop("__rank")
-    )
+    return _nearest_k(scored, k, "adc_dist2", id_col, query_id_col)
 
 
 def ivfpq_topk(
@@ -883,48 +884,19 @@ def ivfpq_topk(
     wq = Window.partitionBy(query_id_col).orderBy(
         F.col("__sim").desc(), F.col("centroid_id")
     )
-    sub = len(codebooks[0][0])
     probes = (
         q_scored.withColumn("__rk", F.row_number().over(wq))
         .filter(F.col("__rk") <= n_probe)
         .select(
             query_id_col,
             "centroid_id",
-            *[
-                F.array(
-                    *[
-                        F.aggregate(
-                            F.zip_with(
-                                F.slice(F.col("__qvec"), s * sub + 1, sub),
-                                F.expr(_sql_literal(
-                                    [float(v) for v in codebooks[s][cc]]
-                                )),
-                                lambda a, b: (a.cast("double") - b)
-                                * (a.cast("double") - b),
-                            ),
-                            F.lit(0.0),
-                            lambda acc, x: acc + x,
-                        )
-                        for cc in range(len(codebooks[0]))
-                    ]
-                ).alias(f"__lut{s}")
-                for s in range(len(codebooks))
-            ],
+            _pq_dists(F.col("__qvec"), codebooks).alias("__lut"),
         )
     )
-    dist = None
-    for s in range(len(codebooks)):
-        term = F.element_at(F.col(f"__lut{s}"), F.element_at("__code", s + 1) + 1)
-        dist = term if dist is None else dist + term
     scored = assigned.join(F.broadcast(probes), "centroid_id").select(
-        query_id_col, id_col, dist.alias("pq_dist")
+        query_id_col, id_col, _adc_dist(len(codebooks)).alias("pq_dist")
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.asc("pq_dist"), F.asc(id_col))
-    return (
-        scored.withColumn("__rank", F.row_number().over(w))
-        .filter(F.col("__rank") <= k)
-        .drop("__rank")
-    )
+    return _nearest_k(scored, k, "pq_dist", id_col, query_id_col)
 
 
 def cosine_topk_arrow(
@@ -1174,31 +1146,15 @@ def jl_components(m: int, dim: int, scale: int = JL_COMP_SCALE) -> list[list[int
 
 def jl_project(vec: Column, dim: int, m: int = 16) -> Column:
     """Project a float embedding onto ``m`` JL axes as an exact
-    ``array<long>``: y_k = Σ_i round(x_i·1e3)·c(k,i). One inlined
-    literal array per axis (the `lsh_bucket_portable` pattern — zero
-    per-row hashing), all folds JVM-side; reproducible on any engine."""
+    ``array<long>``: y_k = Σ_i round(x_i·1e3)·c(k,i). The m×dim
+    component matrix is one inlined literal folded by `_score_rows` (the
+    `lsh_bucket_portable` pattern — zero per-row hashing), all folds
+    JVM-side; reproducible on any engine."""
     from ..util import let_
-
-    arrs = [
-        F.expr("array(" + ",".join(f"{c}L" for c in row) + ")")
-        for row in jl_components(m, dim)
-    ]
 
     # let_-bind the quantized vector once: quantizing inside each axis
     # fold re-runs round+cast dim×m times per row (16× the needed work
     # at m=16) — same exact longs, one quantize pass
-    def body(qv: Column) -> Column:
-        return F.array(
-            *[
-                F.aggregate(
-                    F.zip_with(qv, arr, lambda x, h: x * h),
-                    F.lit(0).cast("long"),
-                    lambda acc, x: acc + x,
-                )
-                for arr in arrs
-            ]
-        )
-
     return let_(
         F.transform(
             vec,
@@ -1206,7 +1162,9 @@ def jl_project(vec: Column, dim: int, m: int = 16) -> Column:
                 x.cast("double") * F.lit(float(JL_QUANT))
             ).cast("long"),
         ),
-        body,
+        lambda qv: _score_rows(
+            qv, jl_components(m, dim), lambda x, h: x * h, F.lit(0).cast("long")
+        ),
     )
 
 

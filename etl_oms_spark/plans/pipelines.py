@@ -29,7 +29,7 @@ from ..star import (
     rollup_statistique,
 )
 from ..schema import STANDARD_COLUMNS
-from ..util import local_rows
+from ..util import empty_frame, local_rows
 from ..transform import (
     derive_daily_columns,
     drop_null_dates,
@@ -167,7 +167,7 @@ def load_or_init_dims(spark, dims_path: str) -> tuple[DataFrame, DataFrame]:
         try:
             return spark.read.parquet(f"{dims_path}/{name}")
         except Exception:  # noqa: BLE001 - first run, dim does not exist yet
-            return spark.createDataFrame([], schema)
+            return empty_frame(spark, schema)
 
     pays = _load("pays", "country STRING, id_pays INT")
     maladie = _load("maladie", "id_maladie INT, nom_maladie STRING")

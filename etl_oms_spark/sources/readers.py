@@ -15,6 +15,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..util import empty_frame
+
 
 def read_csv(spark: SparkSession, path: str, schema=None, **options) -> DataFrame:
     """S1 CSV scan: header + inferred dtypes (pandas ``read_csv`` parity).
@@ -306,7 +308,7 @@ def ingest_new_files(
     try:
         seen = spark.read.parquet(ledger_path).select("file")
     except Exception:  # noqa: BLE001 - first run: no ledger yet
-        seen = spark.createDataFrame([], "file STRING")
+        seen = empty_frame(spark, "file STRING")
     fresh = df.join(
         F.broadcast(seen), df["__file"] == seen["file"], "left_anti"
     )

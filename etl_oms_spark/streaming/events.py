@@ -483,12 +483,11 @@ def single_run_sentinel_flush(
     # exists while this (default-on) knob is on, so pin it for the run
     # rather than inherit whatever the session was configured with —
     # and RESTORE the caller's value afterwards (session-config hygiene,
-    # VERDICT r13 item 5: a helper must not leak a global setting)
+    # VERDICT r13 item 5: a helper must not leak a global setting).
+    # get(key, None) answers None for an unset knob where plain get()
+    # answers the registered default, so an unset knob ends up unset
     _knob = "spark.sql.streaming.noDataMicroBatches.enabled"
-    try:
-        _saved = spark.conf.get(_knob)
-    except Exception:  # noqa: BLE001 - unset → restore to unset
-        _saved = None
+    _saved = spark.conf.get(_knob, None)
     spark.conf.set(_knob, "true")
     try:
         stream = spark.readStream.schema(schema).parquet(src)

@@ -268,6 +268,16 @@ def _sql_literal(v) -> str:
     raise TypeError(f"unsupported literal type {type(v)!r}")
 
 
+def empty_frame(spark, schema) -> DataFrame:
+    """An empty DataFrame with ``schema`` (StructType or DDL string) and
+    ZERO partitions. ``spark.createDataFrame([], schema)`` slices the
+    empty list into ``defaultParallelism`` partitions, so every action on
+    it runs that many Python-worker tasks (measured on local[4]: 1.84 s
+    cold, 0.45 s warm per action, against 0.10-0.18 s here). An empty
+    RDD has no partitions, hence no tasks and no Python workers."""
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+
+
 def local_rows(spark, rows, schema) -> DataFrame:
     """Tiny driver-held row list -> DataFrame WITHOUT the Python-worker
     boundary.
@@ -288,7 +298,7 @@ def local_rows(spark, rows, schema) -> DataFrame:
     so past a cell budget (scalar cells, array elements counted — plans
     in the hundreds of KB break the k=1000 kmeans_assign plan-size pin
     and slow analysis), or on a value type the SQL renderer does not
-    cover (datetime, bytes, Decimal, NaN...), the call falls back to
+    cover (datetime, bytes, Decimal...), the call falls back to
     createDataFrame unchanged.
     """
     from pyspark.sql import types as T
@@ -296,7 +306,7 @@ def local_rows(spark, rows, schema) -> DataFrame:
     if not isinstance(schema, T.StructType):
         schema = T.StructType.fromDDL(schema)
     if not rows:
-        return spark.createDataFrame([], schema)
+        return empty_frame(spark, schema)
     cells = 0
     for row in rows:
         for v in row:

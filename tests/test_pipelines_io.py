@@ -315,3 +315,24 @@ def test_orc_roundtrip_with_schema_evolution(spark, tmp_path):
     assert set(merged.columns) == {"id", "v", "extra"}
     assert merged.count() == 3
     assert merged.filter("extra IS NOT NULL").count() == 1
+
+
+def test_empty_frames_have_no_partitions(spark, tmp_path):
+    """First-run empties (dims, local_rows([])) must not spawn Python-
+    worker tasks: zero partitions, the declared schema, typed columns."""
+    from pyspark.sql import types as T
+
+    from etl_oms_spark.plans.pipelines import load_or_init_dims
+    from etl_oms_spark.util import empty_frame, local_rows
+
+    df = empty_frame(spark, "a INT, b ARRAY<STRING>")
+    assert df.rdd.getNumPartitions() == 0
+    assert df.schema == T.StructType.fromDDL("a INT, b ARRAY<STRING>")
+    assert df.count() == 0
+    assert local_rows(spark, [], "x LONG").rdd.getNumPartitions() == 0
+
+    pays, maladie = load_or_init_dims(spark, str(tmp_path / "no_dims"))
+    assert pays.schema == T.StructType.fromDDL("country STRING, id_pays INT")
+    assert maladie.schema == T.StructType.fromDDL("id_maladie INT, nom_maladie STRING")
+    assert pays.rdd.getNumPartitions() == maladie.rdd.getNumPartitions() == 0
+    assert pays.count() == maladie.count() == 0

@@ -148,3 +148,14 @@ def test_single_run_flush_ignores_file_order(spark):
             .count()
         )
         assert n_days == 3  # all real days flushed exactly once
+
+
+def test_single_run_flush_leaves_unset_knob_unset(spark):
+    """The helper pins the no-data-batch knob for its run only: a knob
+    the session never set must be unset again afterwards, not left at
+    an explicit "true"."""
+    knob = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.unset(knob)
+    with tempfile.TemporaryDirectory(prefix="sr1knob_") as tmp:
+        _run(spark, tmp, _toy_events(spark))
+    assert spark.conf.get(knob, None) is None

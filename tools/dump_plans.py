@@ -11,6 +11,8 @@ that cheap.
 
 from __future__ import annotations
 
+import contextlib
+import io
 import os
 import sys
 
@@ -31,9 +33,10 @@ def main() -> None:
     os.makedirs(base, exist_ok=True)
     for name in names:
         df = qs[name](spark, sf_dir)
-        txt = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain(mode="formatted")
+        txt = buf.getvalue()
         path = os.path.join(base, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(txt)
