@@ -10782,6 +10782,7 @@ def sj1_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from etl_oms_spark.streaming.joins import click_purchase_pairs
+    from etl_oms_spark.util import scoped_conf
 
     # only click/purchase rows ever reach the join (both stream branches
     # filter on event_type), so drop the other 60% of events BEFORE the
@@ -10810,10 +10811,9 @@ def sj1_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # availableNow run tears the state down right after — skip it
         # (~2.2s of pure 32-partition state-store machinery, measured).
         # The always-on production monitor keeps the default.
-        ndmb_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-        ndmb_old = spark.conf.get(ndmb_key)
-        spark.conf.set(ndmb_key, "false")
-        try:
+        with scoped_conf(
+            spark, "spark.sql.streaming.noDataMicroBatches.enabled", "false"
+        ):
             q = (
                 click_purchase_pairs(stream)
                 .writeStream.format("parquet")
@@ -10823,8 +10823,6 @@ def sj1_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .start()
             )
             q.awaitTermination()
-        finally:
-            spark.conf.set(ndmb_key, ndmb_old)
         result = (
             spark.read.parquet(out)
             .groupBy("user_id")

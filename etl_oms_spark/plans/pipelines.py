@@ -6,10 +6,11 @@
 - `star_schema_pipeline`  ≙ EP2 ``ETL_OMS_FINAL.py:110-125``: shared upstream
   plan, cached, fanned into 4 outputs (2 window dims, 1 literal dim,
   broadcast-joined fact).
-- `warehouse_pipeline`    ≙ EP3 ``ETL_OMS_OPERATIONNEL.py:218-369`` single
-  pass: the reference reads every file twice because dict-based id
-  assignment is sequential; join-based assignment collapses it to one pass
-  (SURVEY §3 EP3).
+- `warehouse_directory_to_parquet` ≙ EP3 ``ETL_OMS_OPERATIONNEL.py:218-369``:
+  one directory load upserted into a partitioned parquet fact, with ids
+  from persisted shared dims. The reference reads every file twice because
+  dict-based id assignment is sequential; join-based assignment collapses
+  it to one pass (SURVEY §3 EP3).
 """
 
 from __future__ import annotations
@@ -17,7 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import merge as merge_mod
 from ..reconcile import reconcile
 from ..reshape import melt_with_units, pivot_wide
 from ..star import (
@@ -39,14 +39,12 @@ from ..transform import (
 )
 
 
-def clean_canonical(df: DataFrame, pandemic: str, min_date: str | None = None) -> DataFrame:
+def clean_canonical(df: DataFrame, pandemic: str) -> DataFrame:
     """Shared upstream: reconcile → tolerant date → drop null dates →
     conditional daily derivation (one plan, broadcast guard)."""
     out = reconcile(df, pandemic=pandemic)
     out = out.withColumn("date", tolerant_timestamp(F.col("date").cast("string")))
     out = drop_null_dates(out)
-    if min_date:
-        out = filter_min_date(out, min_date)
     out = derive_daily_columns(out)
     return round_geo(out)
 
@@ -62,42 +60,14 @@ def pivot_report(long_df: DataFrame) -> DataFrame:
     return pivot_wide(long_df, index=["date", "country", "pandemic"])
 
 
-def star_schema_pipeline(
-    df: DataFrame, pandemic: str, pre_cleaned: bool = False
-) -> dict[str, DataFrame]:
+def star_schema_pipeline(df: DataFrame, pandemic: str) -> dict[str, DataFrame]:
     """EP2: one cleaned plan → Pays/Region/Maladie dims + Statistique fact."""
-    cleaned = (df if pre_cleaned else clean_canonical(df, pandemic)).cache()
+    cleaned = clean_canonical(df, pandemic).cache()
     pays = build_pays(cleaned)
     region = build_region(pays)
     maladie = build_maladie(df.sparkSession, [pandemic])
     fact = build_fact(cleaned, pays, region, id_maladie=1)
     return {"Pays": pays, "Region": region, "Maladie": maladie, "Statistique": fact}
-
-
-def warehouse_pipeline(
-    df: DataFrame,
-    pandemic: str,
-    existing_fact: DataFrame | None = None,
-    min_date: str = "2019-01-01",
-) -> DataFrame:
-    """EP3 single-pass warehouse load (in-engine merge form).
-
-    clean → star fact → keep-last dedup on the upsert key → rollup →
-    merge into the existing fact on ``(id_region, date)``.
-    """
-    cleaned = reconcile(df, pandemic=pandemic).withColumn(
-        "date", tolerant_timestamp(F.col("date").cast("string"))
-    )
-    cleaned = filter_min_date(drop_null_dates(cleaned), min_date)
-    cleaned = round_geo(derive_daily_columns(cleaned, guard="all_zero"))
-    tables = star_schema_pipeline(cleaned, pandemic, pre_cleaned=True)
-    fact = tables["Statistique"]
-    fact = fact.withColumn("__arrival", F.monotonically_increasing_id())
-    fact = keep_last_dedup(fact, ["id_region", "date"], "__arrival").drop("__arrival")
-    rolled = rollup_statistique(fact)
-    if existing_fact is None:
-        return rolled
-    return merge_mod.merge_dataframes(existing_fact, rolled, keys=["id_region", "date"])
 
 
 def run_directory_etl(
@@ -163,11 +133,11 @@ def load_or_init_dims(spark, dims_path: str) -> tuple[DataFrame, DataFrame]:
     the dims live as tiny parquet tables next to the fact target.
     """
 
+    from ..sources.readers import read_parquet_or_none
+
     def _load(name: str, schema: str) -> DataFrame:
-        try:
-            return spark.read.parquet(f"{dims_path}/{name}")
-        except Exception:  # noqa: BLE001 - first run, dim does not exist yet
-            return empty_frame(spark, schema)
+        dim = read_parquet_or_none(spark, f"{dims_path}/{name}")
+        return empty_frame(spark, schema) if dim is None else dim
 
     pays = _load("pays", "country STRING, id_pays INT")
     maladie = _load("maladie", "id_maladie INT, nom_maladie STRING")
@@ -255,25 +225,3 @@ def warehouse_directory_to_parquet(
     unioned.unpersist()
     return updates, bilan
 
-
-def warehouse_to_parquet(
-    df: DataFrame,
-    pandemic: str,
-    target_path: str,
-    min_date: str = "2019-01-01",
-) -> None:
-    """EP3 end-to-end with the scalable lake sink: clean → star fact →
-    keep-last dedup → rollup → partition-pruned parquet upsert keyed on
-    ``(id_region, date)`` and partitioned by date. Re-running the same
-    batch is idempotent (the ON CONFLICT property); each batch rewrites
-    only the date partitions it touches."""
-    from ..sources.merge_table import merge_into_parquet
-
-    rolled = warehouse_pipeline(df, pandemic, existing_fact=None, min_date=min_date)
-    merge_into_parquet(
-        df.sparkSession,
-        target_path,
-        rolled,
-        keys=["id_region", "date"],
-        partition_col="date",
-    )

@@ -14,14 +14,61 @@ batch. This module implements the classic partition-swap merge:
 Cost per batch: O(touched partitions), not O(table). On Delta/Iceberg the
 same call becomes a single ``MERGE INTO``; this is the dependency-free
 form with identical semantics for partition-aligned keys.
+
+Every upsert here (`merge_into_parquet`, `cdc_merge_into_parquet`,
+`refresh_aggregate`) runs ONE core, `_swap_partitions`, and differs only
+in how it combines the stored rows of the touched partitions with the
+batch. "No table yet" is `readers.read_parquet_or_none`'s rule, and the
+overwrite mode is a write option, never a session setting: no call here
+changes the caller's session conf.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..merge import merge_dataframes
+from ..merge import cdc_snapshot, merge_dataframes
+from .readers import read_parquet_or_none
+
+
+def _overwrite_partitions(df: DataFrame, path: str, partition_col: str) -> None:
+    """Replace ONLY the partitions present in ``df`` (dynamic overwrite)."""
+    df.write.partitionBy(partition_col).mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).parquet(path)
+
+
+def _swap_partitions(
+    spark: SparkSession, target_path: str, batch: DataFrame, partition_col: str,
+    combine: Callable[[DataFrame | None], DataFrame],
+) -> tuple[DataFrame, list | None]:
+    """The shared partition-swap sequence: read the target (or bootstrap
+    it), prune it to the batch's partition values, write
+    ``combine(affected)`` back over just those partitions.
+
+    ``combine`` gets the target's rows in the touched partitions, or None
+    when there is no table yet. Returns the written frame and the touched
+    values (None on bootstrap).
+    """
+    existing = read_parquet_or_none(spark, target_path)
+    if existing is None:
+        # bootstrap: nothing is read back, so nothing to prune or materialize
+        out, touched = combine(None), None
+    else:
+        # distinct partition values in the batch — tiny driver-side list;
+        # the IN-filter partition-prunes the target scan to just those dirs
+        touched = [r[0] for r in batch.select(partition_col).distinct().collect()]
+        affected = existing.filter(F.col(partition_col).isin(touched))
+        # materialize before overwriting: the merged plan reads from the
+        # same path it is about to replace (read-overwrite hazard). The
+        # checkpoint holds only the touched partitions — bounded by batch
+        # size, not table.
+        out = combine(affected).localCheckpoint(eager=True)
+    _overwrite_partitions(out, target_path, partition_col)
+    return out, touched
 
 
 def merge_into_parquet(
@@ -38,38 +85,10 @@ def merge_into_parquet(
     at least never move a row across partitions — standard constraint for
     partition-swap merges).
     """
-    try:
-        existing = spark.read.parquet(target_path)
-        first_write = False
-    except Exception:  # noqa: BLE001 - target does not exist yet
-        existing = None
-        first_write = True
+    def combine(affected: DataFrame | None) -> DataFrame:
+        return updates if affected is None else merge_dataframes(affected, updates, keys)
 
-    if first_write:
-        updates.write.partitionBy(partition_col).mode("overwrite").parquet(target_path)
-        return
-
-    # distinct partition values in the batch — tiny driver-side list; the
-    # IN-filter below partition-prunes the target scan to just those dirs
-    touched = [
-        r[0] for r in updates.select(partition_col).distinct().collect()
-    ]
-    affected = existing.filter(F.col(partition_col).isin(touched))
-    # materialize before overwriting: the merged plan reads from the same
-    # path it is about to replace (read-overwrite hazard). localCheckpoint
-    # holds only the touched partitions — bounded by batch size, not table.
-    merged = merge_dataframes(affected, updates, keys).localCheckpoint(eager=True)
-
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            merged.write.partitionBy(partition_col)
-            .mode("overwrite")  # dynamic: replaces ONLY the touched partitions
-            .parquet(target_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    _swap_partitions(spark, target_path, updates, partition_col, combine)
 
 
 def compact_partitions(
@@ -88,12 +107,7 @@ def compact_partitions(
         .repartition(F.col(partition_col))
         .localCheckpoint(eager=True)
     )
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.partitionBy(partition_col).mode("overwrite").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    _overwrite_partitions(df, path, partition_col)
 
 
 def _delete_partition_dirs(
@@ -144,50 +158,28 @@ def cdc_merge_into_parquet(
     (keys..., ts, op, values...); rows must not move across partitions.
     Idempotent: re-applying the same batch is a no-op.
     """
-    from ..merge import cdc_snapshot
-
-    try:
-        existing = spark.read.parquet(target_path)
-        first_write = False
-    except Exception:  # noqa: BLE001 - target does not exist yet
-        existing = None
-        first_write = True
-
     value_cols = [
         c for c in changes.columns if c not in (*keys, ts_col, op_col)
     ]
-    if first_write:
-        snap = cdc_snapshot(changes, keys, ts_col, op_col, value_cols, delete_op)
-        snap.write.partitionBy(partition_col).mode("overwrite").parquet(target_path)
+
+    def combine(affected: DataFrame | None) -> DataFrame:
+        log = changes.select(*keys, ts_col, op_col, *value_cols)
+        if affected is not None:
+            log = affected.select(
+                *keys, ts_col, F.lit("U").alias(op_col), *value_cols
+            ).unionByName(log)
+        return cdc_snapshot(log, keys, ts_col, op_col, value_cols, delete_op)
+
+    merged, touched = _swap_partitions(spark, target_path, changes, partition_col, combine)
+    if not touched:
         return
-
-    touched = [r[0] for r in changes.select(partition_col).distinct().collect()]
-    affected = existing.filter(F.col(partition_col).isin(touched))
-    log = affected.select(
-        *keys, ts_col, F.lit("U").alias(op_col), *value_cols
-    ).unionByName(changes.select(*keys, ts_col, op_col, *value_cols))
-    merged = cdc_snapshot(
-        log, keys, ts_col, op_col, value_cols, delete_op
-    ).localCheckpoint(eager=True)
-
     # a batch that deletes EVERY remaining row of a touched partition emits
-    # zero rows for it — dynamic overwrite would never touch that directory
-    # and the stale rows would survive. Diff and delete those explicitly.
+    # zero rows for it — dynamic overwrite never touches that directory and
+    # the stale rows would survive. Diff and delete those explicitly.
     present = {
         r[0] for r in merged.select(partition_col).distinct().collect()
     }
     emptied = [v for v in touched if v not in present]
-
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            merged.write.partitionBy(partition_col)
-            .mode("overwrite")
-            .parquet(target_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
     if emptied:
         _delete_partition_dirs(spark, target_path, partition_col, emptied)
 
@@ -221,15 +213,12 @@ def refresh_aggregate(
         *[F.sum(c).alias(c) for c in sum_cols],
         F.count(F.lit(1)).cast("long").alias(count_col),
     )
-    try:
-        existing = spark.read.parquet(agg_path)
-        touched = [
-            r[partition_col]
-            for r in partials.select(partition_col).distinct().collect()
-        ]
-        relevant = existing.filter(F.col(partition_col).isin(touched))
-        merged = (
-            relevant.select(partials.columns)
+
+    def combine(stored: DataFrame | None) -> DataFrame:
+        if stored is None:
+            return partials
+        return (
+            stored.select(partials.columns)
             .unionAll(partials)
             .groupBy(*keys)
             .agg(
@@ -237,13 +226,8 @@ def refresh_aggregate(
                 F.sum(count_col).cast("long").alias(count_col),
             )
         )
-    except Exception:  # noqa: BLE001 - bootstrap: no table yet
-        merged = partials
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(agg_path)
-        return
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(agg_path)
+
+    _swap_partitions(spark, agg_path, partials, partition_col, combine)
 
 
 def vacuum_table(path: str) -> dict:

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -47,6 +48,24 @@ def read_json(spark: SparkSession, path: str, schema=None, **options) -> DataFra
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
+
+
+def read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet table at ``path``, or None when there is no table yet.
+
+    "No table yet" is exactly two read conditions: ``PATH_NOT_FOUND``
+    (never written) and ``UNABLE_TO_INFER_SCHEMA`` (written with zero
+    rows: only ``_SUCCESS`` is left under the root, as after a CDC batch
+    that deletes every row). Every other failure (an unreadable layout,
+    permissions, IO) is raised: a caller that took it for "no table" would
+    replace the whole table with one batch.
+    """
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise
 
 
 def read_orc(spark: SparkSession, path: str, merge_schema: bool = False) -> DataFrame:
@@ -305,10 +324,8 @@ def ingest_new_files(
     df = read_any(spark, path, fmt=fmt, schema=schema, **options).withColumn(
         "__file", F.input_file_name()
     )
-    try:
-        seen = spark.read.parquet(ledger_path).select("file")
-    except Exception:  # noqa: BLE001 - first run: no ledger yet
-        seen = empty_frame(spark, "file STRING")
+    seen = read_parquet_or_none(spark, ledger_path)
+    seen = empty_frame(spark, "file STRING") if seen is None else seen.select("file")
     fresh = df.join(
         F.broadcast(seen), df["__file"] == seen["file"], "left_anti"
     )

@@ -3,6 +3,8 @@ plan introspection."""
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -332,3 +334,21 @@ def local_rows(spark, rows, schema) -> DataFrame:
     return spark.range(1).select(
         F.inline(F.expr("array(" + ",".join(structs) + ")"))
     )
+
+
+@contextlib.contextmanager
+def scoped_conf(spark, key: str, value: str):
+    """Set session conf ``key`` to ``value`` for the block, then put back
+    what the caller had. ``conf.get(key, None)`` answers None for an
+    unset key where plain ``get`` answers the registered default, so an
+    unset key is unset again afterwards instead of pinned to that
+    default (a helper must not leak a global setting)."""
+    saved = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)

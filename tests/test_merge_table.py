@@ -2,11 +2,19 @@
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
-from etl_oms_spark.sources.merge_table import compact_partitions, merge_into_parquet
+from etl_oms_spark.sources.merge_table import (
+    cdc_merge_into_parquet,
+    compact_partitions,
+    merge_into_parquet,
+    refresh_aggregate,
+)
+from etl_oms_spark.sources.readers import read_parquet_or_none
 
 
 def _batch(spark, rows):
@@ -70,29 +78,6 @@ def test_merge_partition_pruning_plan(spark, tmp_path):
     pruned = existing.filter(F.col("day").isin(["d1"]))
     plan = physical_plan(pruned)
     assert "PartitionFilters" in plan and "day" in plan.split("PartitionFilters")[1][:120]
-
-
-def test_warehouse_to_parquet_end_to_end(spark, tmp_path):
-    from etl_oms_spark.plans.pipelines import warehouse_to_parquet
-    from etl_oms_spark.sources.readers import read_csv
-
-    p = tmp_path / "mp.csv"
-    p.write_text(
-        "location,date,total_cases,total_deaths,new_cases,new_deaths\n"
-        "France,2022-05-01,10,1,10,1\n"
-        "France,2022-05-02,15,2,5,1\n"
-        "Spain,2022-05-01,7,0,7,0\n"
-    )
-    target = str(tmp_path / "statistique")
-    df = read_csv(spark, str(p))
-    warehouse_to_parquet(df, "Monkeypox", target)
-    out = spark.read.parquet(target)
-    assert out.count() == 3
-    # idempotent re-run: same rows, values stable
-    warehouse_to_parquet(df, "Monkeypox", target)
-    out2 = {(r["id_region"], str(r["date"])): r["nouveau_cas"]
-            for r in spark.read.parquet(target).collect()}
-    assert len(out2) == 3 and out2[(1, "2022-05-02")] == 5
 
 
 def test_cdc_merge_into_parquet_deletes_and_idempotence(spark, tmp_path):
@@ -179,3 +164,118 @@ def test_vacuum_table_removes_debris_keeps_data(spark, tmp_path):
     assert not os.path.exists(os.path.join(path, "p=9"))
     # committed data intact
     assert spark.read.parquet(path).count() == 10
+
+
+_MODE = "spark.sql.sources.partitionOverwriteMode"
+
+
+def _cdc(spark, rows):
+    return spark.createDataFrame(
+        rows, "id INT, part STRING, ts TIMESTAMP, op STRING, v INT"
+    )
+
+
+def _first_merge(spark, target):
+    merge_into_parquet(
+        spark, target, _batch(spark, [(1, "d1", 1)]), ["id", "day"], "day"
+    )
+
+
+def _second_merge(spark, target):
+    merge_into_parquet(
+        spark, target, _batch(spark, [(1, "d1", 2), (2, "d2", 2)]), ["id", "day"], "day"
+    )
+
+
+def _cdc_merge(spark, target):
+    t0 = dt.datetime(2024, 1, 1)
+    cdc_merge_into_parquet(
+        spark, target, _cdc(spark, [(1, "d1", t0, "I", 1)]), ["id"], "part"
+    )
+
+
+def _refresh(spark, target):
+    refresh_aggregate(
+        spark, target, _batch(spark, [(1, "d1", 1)]), ["day"], ["v"], "day"
+    )
+
+
+def _compact(spark, target):
+    compact_partitions(spark, target, "day")
+
+
+@pytest.mark.parametrize("before", [None, "STATIC"])
+@pytest.mark.parametrize(
+    "call, setup",
+    [
+        (_first_merge, None),
+        (_second_merge, _first_merge),
+        (_cdc_merge, _cdc_merge),
+        (_refresh, _refresh),
+        (_compact, _first_merge),
+    ],
+    ids=["merge_first", "merge_second", "cdc", "refresh_aggregate", "compact"],
+)
+def test_write_path_leaves_overwrite_mode_alone(spark, tmp_path, call, setup, before):
+    """Every upsert writes with dynamic overwrite as a WRITE option: the
+    session's partitionOverwriteMode is the same after the call as before
+    it, unset included (a leaked "dynamic" makes a later plain partitioned
+    overwrite in the session keep stale partitions)."""
+    target = str(tmp_path / "t")
+    if setup is not None:
+        setup(spark, target)
+    if before is None:
+        spark.conf.unset(_MODE)
+    else:
+        spark.conf.set(_MODE, before)
+    try:
+        call(spark, target)
+        assert spark.conf.get(_MODE, None) == before
+    finally:
+        spark.conf.unset(_MODE)
+
+
+def test_merge_raises_on_unreadable_target(spark, tmp_path):
+    """A target that exists but cannot be read is NOT a first write: the
+    merge must raise and leave the stored partitions on disk, not replace
+    the table with the batch."""
+    target = str(tmp_path / "t")
+    _batch(spark, [(1, "d1", 1), (2, "d2", 2), (3, "d3", 3)]).write.partitionBy(
+        "day"
+    ).parquet(target)
+    # a stray non-partition subdirectory makes the layout unreadable
+    spark.range(1).write.parquet(os.path.join(target, "stray"))
+    with pytest.raises(Exception, match="CONFLICTING_DIRECTORY_STRUCTURES"):
+        merge_into_parquet(
+            spark, target, _batch(spark, [(4, "d4", 4)]), ["id", "day"], "day"
+        )
+    for day in ("d1", "d2", "d3"):
+        assert os.path.isdir(os.path.join(target, f"day={day}"))
+
+
+def test_read_parquet_or_none(spark, tmp_path):
+    assert read_parquet_or_none(spark, str(tmp_path / "missing")) is None
+    target = str(tmp_path / "t")
+    _batch(spark, [(1, "d1", 1)]).write.parquet(target)
+    assert read_parquet_or_none(spark, target).count() == 1
+
+
+def test_cdc_target_emptied_then_bootstrapped(spark, tmp_path):
+    """A CDC batch deleting every row leaves only _SUCCESS under the root:
+    that reads as "no table yet", and the next batch bootstraps it."""
+    target = str(tmp_path / "cdc")
+    t0, t1, t2 = (dt.datetime(2024, 1, d) for d in (1, 2, 3))
+    cdc_merge_into_parquet(
+        spark, target, _cdc(spark, [(1, "p0", t0, "I", 1), (2, "p1", t0, "I", 2)]),
+        ["id"], "part",
+    )
+    cdc_merge_into_parquet(
+        spark, target, _cdc(spark, [(1, "p0", t1, "D", 0), (2, "p1", t1, "D", 0)]),
+        ["id"], "part",
+    )
+    assert read_parquet_or_none(spark, target) is None
+    cdc_merge_into_parquet(
+        spark, target, _cdc(spark, [(3, "p2", t2, "I", 3)]), ["id"], "part"
+    )
+    rows = {(r["id"], r["part"], r["v"]) for r in spark.read.parquet(target).collect()}
+    assert rows == {(3, "p2", 3)}

@@ -8,7 +8,6 @@ from etl_oms_spark.plans.pipelines import (
     long_format_pipeline,
     pivot_report,
     star_schema_pipeline,
-    warehouse_pipeline,
 )
 from etl_oms_spark.sources.readers import read_csv, read_json, scan_dataset_directory
 from etl_oms_spark.sources.writers import upsert_sql, write_csv, write_json
@@ -61,15 +60,6 @@ def test_star_schema_pipeline(spark, tmp_path):
     fact = tables["Statistique"].collect()
     assert len(fact) == 3
     assert tables["Maladie"].first()["nom_maladie"] == "COVID-19"
-
-
-def test_warehouse_pipeline_merge(spark, tmp_path):
-    df = read_csv(spark, _wide_csv(tmp_path))
-    first = warehouse_pipeline(df, "COVID-19")
-    assert first.count() == 3
-    # re-run with existing fact → idempotent upsert, same rowcount
-    again = warehouse_pipeline(df, "COVID-19", existing_fact=first)
-    assert again.count() == 3
 
 
 def test_csv_json_roundtrip(spark, tmp_path):

@@ -159,3 +159,28 @@ def test_single_run_flush_leaves_unset_knob_unset(spark):
     with tempfile.TemporaryDirectory(prefix="sr1knob_") as tmp:
         _run(spark, tmp, _toy_events(spark))
     assert spark.conf.get(knob, None) is None
+
+
+def test_sj1_leaves_unset_knob_unset(spark, sf_dir):
+    """sj1 switches the no-data-batch knob off for its own run only: a
+    knob the session never set is unset again afterwards, not pinned to
+    the registered default."""
+    import __spark_entry__ as entry_mod
+
+    knob = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.unset(knob)
+    assert entry_mod.queries()["sj1_stream_stream_join"](spark, sf_dir).count() > 0
+    assert spark.conf.get(knob, None) is None
+
+
+def test_scoped_conf_restores_caller_value(spark):
+    from etl_oms_spark.util import scoped_conf
+
+    knob = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.set(knob, "false")
+    try:
+        with scoped_conf(spark, knob, "true"):
+            assert spark.conf.get(knob) == "true"
+        assert spark.conf.get(knob, None) == "false"
+    finally:
+        spark.conf.unset(knob)
