@@ -6,9 +6,12 @@ similar pair) — correct for pairs but not transitive: a~b, b~c, a!~c keeps
 connected components over the similarity graph; CC is inherently iterative,
 so this is the engine's representative iterative-algorithm pattern:
 
-- large-star/small-star style label propagation: every node repeatedly
-  adopts the min component id among itself and its neighbors, until a
-  fixed point. O(diameter) rounds; each round is one join + one aggregate.
+- large-star / small-star edge contraction (Kiveris et al. 2014): each
+  round is one window over the CURRENT, geometrically shrinking edge set;
+  O(log² n) rounds, 2-4 alternation cycles on real dup graphs.
+- a driver finish: an input of at most `_LOCAL_EDGES` edge rows is
+  closed by a min-root union-find in numpy instead — below that size a
+  round is fixed engine cost around no compute.
 - `localCheckpoint` each round truncates the lineage — without it the plan
   doubles every iteration and the driver OOMs on plan compilation long
   before data is a problem (the classic iterative-Spark trap).
@@ -18,6 +21,49 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+# edge rows at or below which connected_components finishes on the driver
+_LOCAL_EDGES = 2_000_000
+
+
+def _min_roots(n: int, a, b):
+    """Min-root union-find over ``n`` nodes and the edges (a[i], b[i]):
+    hook each root onto the smallest root it shares an edge with, jump
+    every node to its root, repeat until no edge joins two roots. Hooks
+    point to smaller indices, so each root is its component's minimum."""
+    import numpy as np
+
+    parent = np.arange(n)
+    while True:
+        ra, rb = parent[a], parent[b]
+        live = ra != rb
+        if not live.any():
+            return parent
+        a, b, ra, rb = a[live], b[live], ra[live], rb[live]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while not np.array_equal(parent[parent], parent):
+            parent = parent[parent]
+
+
+def _driver_components(spark, t, id_field: StructField) -> DataFrame:
+    """(id, component) over the collected (u, v) Arrow table ``t``; a null
+    endpoint is never an edge and any null adds one (null, null) row."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    u, v = t.column("u"), t.column("v")
+    ids = np.unique(np.concatenate([u.drop_null().to_numpy(), v.drop_null().to_numpy()]))
+    both = pc.and_(pc.is_valid(u), pc.is_valid(v))
+    a, b = (np.searchsorted(ids, c.filter(both).to_numpy()) for c in (u, v))
+    cols = [pa.array(ids), pa.array(ids[_min_roots(len(ids), a, b)])]
+    if u.null_count or v.null_count:
+        cols = [pa.concat_arrays([c, pa.nulls(1, c.type)]) for c in cols]
+    comp = StructField("component", id_field.dataType, id_field.nullable)
+    return spark.createDataFrame(
+        pa.table(cols, names=["id", "component"]), StructType([id_field, comp])
+    )
 
 
 def connected_components(
@@ -26,10 +72,11 @@ def connected_components(
     dst: str = "id_b",
     max_iterations: int = 20,
 ) -> DataFrame:
-    """Connected components by min-label propagation.
+    """Connected components by star contraction with a driver finish.
 
     ``edges`` is an undirected pair list; returns (id, component) with
-    component = the minimum node id in each component.
+    component = the minimum node id in each component. A null endpoint
+    is never an edge: it yields one (null, null) row.
 
     **Eager at construction**: this function runs the contraction loop
     (and therefore EXECUTES the caller's full upstream edge plan via
@@ -59,13 +106,11 @@ def connected_components(
     join on the CURRENT edge set — and the edge set CONTRACTS
     geometrically (measured on pj1's 10.5M-pair dup graph at the 10×
     decade: 10.5M → 260k → 37k → 32k fixpoint), so rounds after the
-    first cost domain-sized work. The previous label-propagation loop
-    re-joined the FULL edge list every round (O(rounds·|E|) shuffle);
-    this one moves O(|E|) in round 0 and the contracted remainder
-    afterwards — the property that matters at 100 TB. Convergence
-    (Kiveris Thm. 1/2): the alternation reaches the star fixpoint —
-    every edge (node, component-min) — in O(log² n) rounds; real dup
-    graphs (near-cliques + short chains) take 2-4 alternation cycles.
+    first cost domain-sized work: O(|E|) moves in round 0, only the
+    contracted remainder afterwards. Convergence (Kiveris Thm. 1/2):
+    the alternation reaches the star fixpoint — every edge (node,
+    component-min) — in O(log² n) rounds; real dup graphs
+    (near-cliques + short chains) take 2-4 alternation cycles.
     The loop stops when the edge-set signature (count + hash sum) is
     unchanged through a full large+small cycle, checked only after
     small-star rounds so the surviving orientation is always
@@ -76,39 +121,47 @@ def connected_components(
     ``max_iterations`` bounds ALTERNATION ROUNDS (one star operation
     each); the default 20 covers ten full cycles — far beyond any
     measured dup graph.
+
+    Driver finish: an input of at most ``_LOCAL_EDGES`` rows is
+    collected through Arrow and closed by `_min_roots` (3 jobs where the
+    rounds took 37 on a 14-node graph); a larger one runs the rounds.
+    Python-side driver memory per edge: 16 B of Arrow plus a numpy peak
+    of 65 B on pj1's 964,854 pairs at sf0.1 (0.14 s), 99 B for 2M edges
+    over 4M ids — about 230 MB at the bound. The driver JVM holds more
+    on top (not measured): it buffers the collected Arrow batches, and the result frame
+    goes back through it (above ~48 MB, Spark's Arrow local-relation
+    threshold, as one partition per 10,000 rows: 400 at the bound).
     """
     import warnings
 
-    # Materialize the edge list once: deriving iteration state from the
-    # pre-checkpoint plan captures the caller's — possibly expensive —
-    # pair-join lineage, and round 0 plus the node-set derivation would
-    # re-evaluate it (measured 43s → 17s warm on pj1's PPJoin pairs at
-    # sf0.1 from checkpointing first).
-    # ONE materialization of the caller's plan; everything else (the
-    # deduped active edge set AND the node set) derives from this
-    # checkpointed block — deriving either from the pre-checkpoint
-    # `edges` would re-run the caller's pair join per branch (the exact
-    # trap the docstring's 43s→17s measurement is about; re-learned in
-    # r13 when an `edges`-derived node set OOM'd pj1's sf0.1 sweep by
-    # re-executing the PPJoin twice more)
+    # ONE materialization of the caller's plan; the driver finish, the
+    # active edge set and the node set all derive from it. Deriving any
+    # of them from the pre-checkpoint `edges` re-runs the caller's pair
+    # join per branch (43s → 17s warm on pj1's PPJoin pairs at sf0.1;
+    # an `edges`-derived node set OOM'd pj1's sf0.1 sweep in r13).
     raw = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
     ).localCheckpoint(eager=True)
+    nodes = raw.select(F.col("u").alias("id")).union(
+        raw.select(F.col("v").alias("id"))
+    )
+    # size the input in one job over the checkpointed blocks (the
+    # DataFrame count() adds a shuffle and, under AQE, a second job);
+    # only an input that fits is collected (toArrow is Arrow whatever
+    # the session's pandas conf says)
+    if raw._jdf.queryExecution().toRdd().count() <= _LOCAL_EDGES:
+        return _driver_components(
+            raw.sparkSession, raw.toArrow(), nodes.schema["id"]
+        )
     e0 = (
         raw.filter(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint(eager=False)
     )
-    # the original node set: nodes can leave the ACTIVE edge set when
-    # their whole component contracts away (and self-loop-only inputs
-    # lose their edges to the filter above) — they are re-attached as
-    # their own component at the end
-    all_nodes = (
-        raw.select(F.col("u").alias("id"))
-        .union(raw.select(F.col("v").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    # the original node set: self-loop-only and null-endpoint nodes
+    # never enter the ACTIVE edge set (the filter above drops them) —
+    # they are re-attached as their own component at the end
+    all_nodes = nodes.distinct().localCheckpoint(eager=False)
 
     from pyspark.sql import Window
 
@@ -246,8 +299,8 @@ def connected_components(
             stacklevel=2,
         )
     # star edges are (child, root); roots label themselves, and nodes
-    # whose component contracted out of the active set are singletons
-    # of their own minimum — exactly the (id, component) contract
+    # outside the active set are singletons of their own minimum —
+    # exactly the (id, component) contract
     star = e.select(
         F.col("u").alias("id"), F.col("v").alias("component")
     ).union(
@@ -288,6 +341,7 @@ def transitive_minhash_dedup(
         F.col("est_jaccard") >= threshold
     )
     clusters = dedup_clusters(sims)
+    sigs.unpersist()  # the clusters are computed eagerly: nothing reads sigs
     victims = clusters.filter(F.col("doc_id") != F.col("canonical_id")).select(id_col)
     return df.join(victims, id_col, "left_anti")
 

@@ -2,6 +2,11 @@
 
 from __future__ import annotations
 
+import random
+
+import pytest
+
+from etl_oms_spark.operators import graph
 from etl_oms_spark.operators.graph import (
     connected_components,
     dedup_clusters,
@@ -19,7 +24,7 @@ def test_connected_components_chain(spark):
     assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20}
 
 
-def test_connected_components_long_chain_pointer_jumping(spark):
+def test_connected_components_long_chain_pointer_jumping(spark, monkeypatch):
     # a 200-hop chain (depth >> the default round budget) converges
     # WITHOUT the non-convergence warning: the small-star rounds add
     # pointer-jump shortcut edges, so the remaining chain contracts
@@ -28,6 +33,7 @@ def test_connected_components_long_chain_pointer_jumping(spark):
     # propagation alone would need 200 rounds
     import warnings
 
+    monkeypatch.setattr(graph, "_LOCAL_EDGES", 0)  # the distributed rounds
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(200)], "id_a long, id_b long"
     )
@@ -39,7 +45,15 @@ def test_connected_components_long_chain_pointer_jumping(spark):
     assert not any(issubclass(w.category, RuntimeWarning) for w in caught)
 
 
-def test_connected_components_star_early_exit_labels(spark):
+# clique 1-2-3-4, clique 10-11-12, chain 20-21-22-23, pair 30-31
+_CLIQUES_CHAIN_PAIR = (
+    [(a, b) for a in (1, 2, 3, 4) for b in (1, 2, 3, 4) if a < b]
+    + [(10, 11), (11, 12), (10, 12)]
+    + [(20, 21), (21, 22), (22, 23), (30, 31)]
+)
+
+
+def test_connected_components_star_early_exit_labels(spark, monkeypatch):
     # the structural early exit (disjoint-star detection after a
     # small-star round, gated on a stable edge count) must leave labels
     # identical to plain fixpoint iteration: mix near-cliques (the dup
@@ -47,13 +61,8 @@ def test_connected_components_star_early_exit_labels(spark):
     # min-labels and that convergence is reached without the warning
     import warnings
 
-    edges = spark.createDataFrame(
-        # clique 1-2-3-4, clique 10-11-12, chain 20-21-22-23, pair 30-31
-        [(a, b) for a in (1, 2, 3, 4) for b in (1, 2, 3, 4) if a < b]
-        + [(10, 11), (11, 12), (10, 12)]
-        + [(20, 21), (21, 22), (22, 23), (30, 31)],
-        "id_a long, id_b long",
-    )
+    monkeypatch.setattr(graph, "_LOCAL_EDGES", 0)  # the distributed rounds
+    edges = spark.createDataFrame(_CLIQUES_CHAIN_PAIR, "id_a long, id_b long")
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
         out = {
@@ -66,9 +75,10 @@ def test_connected_components_star_early_exit_labels(spark):
     assert not any(issubclass(w.category, RuntimeWarning) for w in caught)
 
 
-def test_connected_components_warns_on_non_convergence(spark):
+def test_connected_components_warns_on_non_convergence(spark, monkeypatch):
     import warnings
 
+    monkeypatch.setattr(graph, "_LOCAL_EDGES", 0)  # the distributed rounds
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "id_a long, id_b long"
     )
@@ -76,6 +86,92 @@ def test_connected_components_warns_on_non_convergence(spark):
         warnings.simplefilter("always")
         connected_components(edges, max_iterations=1)
     assert any("fixed point" in str(w.message) for w in caught)
+
+
+def _reference_components(rows):
+    """(id -> min id of its component) by plain Python union-find; a null
+    endpoint is never an edge and adds one None -> None entry."""
+    parent = {}
+
+    def root(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in rows:
+        for x in (a, b):
+            if x is not None:
+                parent.setdefault(x, x)
+        if a is not None and b is not None:
+            ra, rb = root(a), root(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    out = {x: root(x) for x in parent}
+    if any(None in r for r in rows):
+        out[None] = None
+    return out
+
+
+_rnd = random.Random(8)
+_perm = list(range(3000))
+_rnd.shuffle(_perm)
+# (rows, id type)
+_CC_FIXTURES = {
+    # a 200-hop chain, every hop listed in both orientations
+    "chain": ([(i, i + 1) for i in range(200)]
+              + [(i + 1, i) for i in range(200)], "long"),
+    # one component of 3000 shuffled ids: a random tree plus 3000 edges
+    "giant": ([(_perm[i], _perm[_rnd.randrange(i)]) for i in range(1, 3000)]
+              + [(_perm[_rnd.randrange(3000)], _perm[_rnd.randrange(3000)])
+                 for _ in range(3000)], "long"),
+    "self_loops": ([(1, 1), (2, 2), (7, 7)], "int"),
+    "empty": ([], "long"),
+    "duplicates_int": ([(1, 2), (2, 1), (1, 2), (3, 4), (4, 3), (4, 3),
+                        (4, 5), (5, 4)], "int"),
+    "duplicates_long": ([(1, 2), (2, 1), (1, 2), (3, 4), (4, 3), (4, 3),
+                         (4, 5), (5, 4)], "long"),
+    "null_endpoint_int": ([(1, None), (2, 3), (5, 5)], "int"),
+    "null_endpoint_long": ([(1, None), (2, 3), (5, 5)], "long"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_CC_FIXTURES))
+def test_connected_components_driver_finish_parity(spark, monkeypatch, name):
+    # the distributed rounds (bound 0) and the driver finish (default
+    # bound) return the same rows and schema, and match a Python reference
+    rows, id_type = _CC_FIXTURES[name]
+    edges = spark.createDataFrame(rows, f"id_a {id_type}, id_b {id_type}")
+    results = []
+    for bound in (0, graph._LOCAL_EDGES):
+        monkeypatch.setattr(graph, "_LOCAL_EDGES", bound)
+        out = connected_components(edges)
+        got = sorted(out.collect(), key=lambda r: (r["id"] is None, r["id"]))
+        results.append((out.schema, got))
+    assert results[0] == results[1]
+    spark_type = {"int": "int", "long": "bigint"}[id_type]
+    assert results[0][0].simpleString() == (
+        f"struct<id:{spark_type},component:{spark_type}>"
+    )
+    assert {r["id"]: r["component"] for r in results[0][1]} == (
+        _reference_components(rows)
+    )
+
+
+def test_connected_components_small_input_job_budget(spark):
+    # a small input is checkpointed once and collected once; no star
+    # round, signature job or emptiness probe runs (the rounds took 37
+    # jobs on this input)
+    edges = spark.createDataFrame(
+        _CLIQUES_CHAIN_PAIR + [(40, 40)], "id_a long, id_b long"
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("cc-job-budget", "connected_components job budget")
+    try:
+        rows = connected_components(edges).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert len(rows) == 14
+    assert len(sc.statusTracker().getJobIdsForGroup("cc-job-budget")) <= 4
 
 
 def test_dedup_clusters_transitive(spark):
@@ -94,8 +190,12 @@ def test_transitive_minhash_dedup(spark):
         (4, " ".join(f"z{i}" for i in range(40))),  # unrelated
     ]
     df = spark.createDataFrame(docs, ["doc_id", "text"])
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.cachedData().size()
     kept = sorted(r["doc_id"] for r in transitive_minhash_dedup(df, threshold=0.5).collect())
     assert kept == [1, 4]  # whole 1-2-3 cluster collapses to min id
+    # the signatures it caches are released once the clusters exist
+    assert cache.cachedData().size() == before
 
 
 def test_run_directory_etl_bilan(spark, tmp_path):
