@@ -10,7 +10,11 @@
   one directory load upserted into a partitioned parquet fact, with ids
   from persisted shared dims. The reference reads every file twice because
   dict-based id assignment is sequential; join-based assignment collapses
-  it to one pass (SURVEY §3 EP3).
+  it to one pass (SURVEY §3 EP3). Every disease in the directory goes
+  through ONE plan: the daily-derivation guard is scoped per pandemic and
+  the lag window partitioned by (pandemic, country), id_maladie comes from
+  a broadcast dim join, and one dedup + rollup feed one merge — no driver
+  collect, no per-disease branch.
 """
 
 from __future__ import annotations
@@ -29,7 +33,7 @@ from ..star import (
     rollup_statistique,
 )
 from ..schema import STANDARD_COLUMNS
-from ..util import empty_frame, local_rows
+from ..util import empty_frame
 from ..transform import (
     derive_daily_columns,
     drop_null_dates,
@@ -66,7 +70,7 @@ def star_schema_pipeline(df: DataFrame, pandemic: str) -> dict[str, DataFrame]:
     pays = build_pays(cleaned)
     region = build_region(pays)
     maladie = build_maladie(df.sparkSession, [pandemic])
-    fact = build_fact(cleaned, pays, region, id_maladie=1)
+    fact = build_fact(cleaned, pays, region, maladie)
     return {"Pays": pays, "Region": region, "Maladie": maladie, "Statistique": fact}
 
 
@@ -152,19 +156,25 @@ def warehouse_directory_to_parquet(
     dims_path: str | None = None,
 ) -> tuple[DataFrame | None, dict[str, int]]:
     """EP3 directory run with STABLE shared dimensions (the reference's
-    run_etl loop, ETL_OMS_OPERATIONNEL.py:218-369).
+    run_etl loop, ETL_OMS_OPERATIONNEL.py:218-369), as ONE plan for every
+    disease in the directory.
 
     1. scan + reconcile + union the directory (one pass, bilan counters);
     2. load the persisted Pays/Maladie dims and grow them with the batch's
        new countries/diseases (anti-join growth — ids never change once
        assigned, so id_region means the same country in every pandemic and
        every run);
-    3. build each pandemic's fact against the SHARED dims;
+    3. clean once: the all-zero guard is scoped per pandemic and the
+       lag-diff per (pandemic, country), matching the reference's per-file
+       processing; the fact takes id_maladie from a broadcast join of the
+       SHARED Maladie dim, then one keep-last dedup and one rollup;
     4. one merge into the parquet fact keyed ``(id_maladie, id_region,
        date)`` — id_maladie in the key so two diseases reporting the same
        region-day never overwrite each other.
 
-    Returns ``(unioned updates DataFrame or None, bilan)``.
+    Nothing is collected to the driver and the plan's shape does not grow
+    with the number of diseases. Returns ``(updates DataFrame or None,
+    bilan)``.
     """
     from ..sources.merge_table import merge_into_parquet
     from ..star import grow_dimension
@@ -175,9 +185,6 @@ def warehouse_directory_to_parquet(
         return None, bilan
     unioned = unioned.cache()
 
-    diseases = sorted(
-        r["pandemic"] for r in unioned.select("pandemic").distinct().collect()
-    )
     pays, maladie = load_or_init_dims(spark, dims_path)
     # grow, then materialize: the grown dim is read from dims_path and is
     # about to overwrite it (read-overwrite hazard); dims are tiny.
@@ -186,7 +193,7 @@ def warehouse_directory_to_parquet(
     ).localCheckpoint(eager=True)
     maladie = grow_dimension(
         maladie,
-        local_rows(spark, [(d,) for d in diseases], "nom_maladie STRING"),
+        unioned.select(F.col("pandemic").alias("nom_maladie")),
         "nom_maladie",
         "id_maladie",
     ).localCheckpoint(eager=True)
@@ -197,31 +204,17 @@ def warehouse_directory_to_parquet(
     maladie.write.mode("overwrite").parquet(f"{dims_path}/maladie")
     region.write.mode("overwrite").parquet(f"{dims_path}/region")
 
-    disease_ids = {r["nom_maladie"]: r["id_maladie"] for r in maladie.collect()}
-    parts: list[DataFrame] = []
-    for pandemic in diseases:
-        part = unioned.filter(F.col("pandemic") == pandemic)
-        # the guard + lag-diff run per pandemic slice, matching the
-        # reference's per-file processing semantics
-        cleaned = round_geo(derive_daily_columns(part, guard="all_zero"))
-        fact = build_fact(cleaned, pays, region, id_maladie=disease_ids[pandemic])
-        fact = fact.withColumn("__arrival", F.monotonically_increasing_id())
-        fact = keep_last_dedup(
-            fact, ["id_maladie", "id_region", "date"], "__arrival"
-        ).drop("__arrival")
-        parts.append(
-            rollup_statistique(fact, keys=("id_maladie", "id_region", "date"))
+    keys = ["id_maladie", "id_region", "date"]
+    cleaned = round_geo(
+        derive_daily_columns(
+            unioned, partition_by=["pandemic", "country"], guard="all_zero"
         )
-    updates = parts[0]
-    for p in parts[1:]:
-        updates = updates.unionByName(p)
-    merge_into_parquet(
-        spark,
-        target_path,
-        updates,
-        keys=["id_maladie", "id_region", "date"],
-        partition_col="date",
     )
+    fact = build_fact(cleaned, pays, region, maladie).withColumn(
+        "__arrival", F.monotonically_increasing_id()
+    )
+    fact = keep_last_dedup(fact, keys, "__arrival").drop("__arrival")
+    updates = rollup_statistique(fact, keys=tuple(keys))
+    merge_into_parquet(spark, target_path, updates, keys=keys, partition_col="date")
     unioned.unpersist()
     return updates, bilan
-

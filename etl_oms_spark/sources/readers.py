@@ -2,10 +2,9 @@
 
 SURVEY §2.1 rows S1-S5. The reference reads one file at a time with pandas
 (``extract`` — ETL_OMS.py:32-36) and loops a directory twice
-(ETL_OMS_OPERATIONNEL.py:242,287); the Spark form hands the whole directory
-to one reader per format and keeps per-file provenance via
-``input_file_name()`` — a single distributed scan, no driver loop, no
-second pass.
+(ETL_OMS_OPERATIONNEL.py:242,287); the Spark form builds one lazy read per
+file, tagged with its file name, and the caller's union of them runs as one
+job — no second pass.
 """
 
 from __future__ import annotations
@@ -80,40 +79,24 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def scan_dataset_directory(
-    spark: SparkSession,
-    directory: str,
-    with_provenance: bool = True,
-) -> dict[str, DataFrame]:
+def scan_dataset_directory(spark: SparkSession, directory: str) -> dict[str, DataFrame]:
     """S3 directory scan with case-insensitive extension filter.
 
-    Mirrors the ``./DATASETS`` loop (ETL_OMS_OPERATIONNEL.py:242-245) but
-    groups files per format and issues ONE distributed read per format.
-    Heterogeneous schemas within a format are unioned by the caller after
-    reconciliation (`unionByName(allowMissingColumns=True)`); per-file
-    identity survives via the ``_source_file`` column, so the per-file
-    driver loop of the reference disappears.
+    Mirrors the ``./DATASETS`` loop (ETL_OMS_OPERATIONNEL.py:242-245): each
+    ``.csv`` / ``.json`` file, in name order, becomes one lazy read of its
+    own, because schemas differ per file. The caller reconciles them and
+    unions the conformable ones (`unionByName(allowMissingColumns=True)`),
+    so the union still executes as one job; per-file identity survives via
+    the ``_source_file`` column.
     """
-    csvs, jsons = [], []
-    for name in sorted(os.listdir(directory)):
-        low = name.lower()
-        full = os.path.join(directory, name)
-        if low.endswith(".csv"):
-            csvs.append(full)
-        elif low.endswith(".json"):
-            jsons.append(full)
+    readers = {".csv": read_csv, ".json": read_json}
     out: dict[str, DataFrame] = {}
-    for fmt, paths, reader in (("csv", csvs, read_csv), ("json", jsons, read_json)):
-        if not paths:
-            continue
-        # schemas differ per file → read per file lazily, reconcile upstream;
-        # still lazy plans, the union executes as one job.
-        out.update({p: _with_provenance(reader(spark, p), p) if with_provenance else reader(spark, p) for p in paths})
+    for name in sorted(os.listdir(directory)):
+        reader = readers.get(os.path.splitext(name)[1].lower())
+        if reader is not None:
+            path = os.path.join(directory, name)
+            out[path] = reader(spark, path).withColumn("_source_file", F.lit(name))
     return out
-
-
-def _with_provenance(df: DataFrame, path: str) -> DataFrame:
-    return df.withColumn("_source_file", F.lit(os.path.basename(path)))
 
 
 def read_jdbc_dim(
@@ -264,38 +247,6 @@ def read_binary_dir(
     if max_bytes is not None:
         df = df.filter(F.col("length") <= max_bytes)
     return df
-
-
-def read_csv_tolerant(
-    spark: SparkSession,
-    path: str,
-    schema,
-    corrupt_col: str = "_corrupt_record",
-    **options,
-) -> DataFrame:
-    """S1 + the reference's coerce philosophy lifted to whole records:
-    PERMISSIVE parse against an explicit schema, with rows that fail the
-    schema landed in ``corrupt_col`` instead of failing the job (pandas'
-    ``errors="coerce"`` coerces cell-wise; this is the record-wise Spark
-    form — quarantine, count, and triage the bad rows downstream).
-
-    The corrupt column is appended to the caller's schema automatically.
-    Pass ``mode="FAILFAST"`` to assert clean data instead, or
-    ``mode="DROPMALFORMED"`` to silently drop (the pandas dropna twin).
-    At 100 TB a quarantine column beats a failed 6-hour job.
-    """
-    from pyspark.sql import types as T
-
-    full = T.StructType(
-        list(schema.fields) + [T.StructField(corrupt_col, T.StringType(), True)]
-    )
-    opts = {
-        "header": "true",
-        "mode": "PERMISSIVE",
-        "columnNameOfCorruptRecord": corrupt_col,
-        **options,
-    }
-    return spark.read.options(**opts).schema(full).csv(path)
 
 
 def ingest_new_files(

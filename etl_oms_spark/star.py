@@ -75,13 +75,14 @@ def build_fact(
     df: DataFrame,
     pays: DataFrame,
     region: DataFrame,
-    id_maladie: int = 1,
+    maladie: DataFrame,
 ) -> DataFrame:
     """``Statistique`` fact: broadcast dim joins + rename (J1/J2/P8).
 
-    fact × Pays on country (J1, ETL_OMS_FINAL.py:88) then × Region on
-    ``(id_pays, country=nom_region)`` (J2, :89), measures renamed to the
-    French output names (P8, :93-98). Dims are broadcast → no fact shuffle.
+    fact × Pays on country (J1, ETL_OMS_FINAL.py:88), × Region on
+    ``(id_pays, country=nom_region)`` (J2, :89) and × Maladie on
+    ``pandemic=nom_maladie``, measures renamed to the French output names
+    (P8, :93-98). Dims are broadcast → no fact shuffle.
     """
     joined = df.join(F.broadcast(pays), "country", "inner")
     joined = joined.join(
@@ -90,8 +91,11 @@ def build_fact(
         & (joined["country"] == region["nom_region"]),
         "inner",
     ).drop(region["id_pays"])
+    joined = joined.join(
+        F.broadcast(maladie), joined["pandemic"] == maladie["nom_maladie"], "inner"
+    )
     return joined.select(
-        F.lit(id_maladie).alias("id_maladie"),
+        "id_maladie",
         "id_region",
         F.col("date").cast("date").alias("date"),
         F.col("new_deaths").alias("nouveau_mort"),
@@ -127,16 +131,21 @@ def rollup_statistique(
     warehouse groups on ``(id_maladie, id_region, date)`` so facts for
     different diseases never collapse into one row). Hash aggregate with
     automatic map-side partial aggregation.
+
+    Every measure is ``try_cast`` to double first, so the stored types never
+    depend on what a batch's files inferred (an integer CSV, a double JSON,
+    an empty column read as string): a partition rewritten by one batch
+    stays readable beside the partitions other batches wrote.
     """
     keys = list(keys)
     aggs = []
     if "id_maladie" not in keys:
         aggs.append(F.first("id_maladie").alias("id_maladie"))
     aggs += [
-        F.sum("nouveau_mort").alias("nouveau_mort"),
-        F.sum("nouveau_cas").alias("nouveau_cas"),
-        F.max("total_mort").alias("total_mort"),
-        F.max("total_cas").alias("total_cas"),
+        F.sum(F.col("nouveau_mort").try_cast("double")).alias("nouveau_mort"),
+        F.sum(F.col("nouveau_cas").try_cast("double")).alias("nouveau_cas"),
+        F.max(F.col("total_mort").try_cast("double")).alias("total_mort"),
+        F.max(F.col("total_cas").try_cast("double")).alias("total_cas"),
     ]
     return df.groupBy(*keys).agg(*aggs)
 

@@ -8,8 +8,8 @@ every function here stays inside whole-stage codegen.
 Scale notes
 -----------
 - `derive_daily_columns` is the one shuffle-bearing operator (window
-  partitioned by country): it shuffles once on the group key and the A4/A5
-  guard is folded into the same plan through a broadcast scalar aggregate
+  partitioned by the group keys): it shuffles once on them, and the A4/A5
+  guard is folded into the same plan through a broadcast aggregate
   (SURVEY §4 item 3) instead of a second eager scan.
 - All date/numeric coercions use try_* functions → invalid input becomes
   NULL (pandas ``errors="coerce"``) and is dropped by explicit filters,
@@ -136,10 +136,15 @@ def derive_daily_columns(
     zero/NULL (``guard="all_zero"``, v4: ETL_OMS_OPERATIONNEL.py:141-144),
     replace it with the per-group lag-diff of the cumulative column.
 
-    One-plan guard: the whole-table predicate is computed as a scalar aggregate
-    and broadcast-cross-joined back (SURVEY §4 item 3) — a distributed
-    aggregate plus a zero-cost broadcast instead of an eager ``.all()``
-    action per column, and no single-partition global window.
+    The guard is scoped to the groups of every ``partition_by`` key but the
+    last, and the lag window to all of them: ``["pandemic", "country"]``
+    decides "entirely zero" once per pandemic and diffs per (pandemic,
+    country) series. With one key the scope is the whole frame.
+
+    One-plan guard: the predicate is a distributed aggregate over the scope's
+    keys, broadcast-joined back on them (null-safe); with an empty scope it
+    is a scalar aggregate broadcast-cross-joined back (SURVEY §4 item 3).
+    No eager ``.all()`` action per column, no single-partition global window.
     """
     cumulative_to_daily = cumulative_to_daily or {
         "confirmed": "new_cases",
@@ -164,9 +169,13 @@ def derive_daily_columns(
     if not aggs:
         return df
 
-    flags = df.agg(*aggs)
+    scope = partition_by[:-1]
+    flags = F.broadcast(
+        df.groupBy(*scope).agg(*aggs).withColumnsRenamed({k: f"__g_{k}" for k in scope})
+    )
+    on = [df[k].eqNullSafe(flags[f"__g_{k}"]) for k in scope]
     dtypes = dict(df.dtypes)
-    out = df.crossJoin(F.broadcast(flags))
+    out = df.join(flags, on) if on else df.crossJoin(flags)
     for cum, daily in cumulative_to_daily.items():
         flag = f"__nz_{daily}"
         if flag not in out.columns:
@@ -181,7 +190,7 @@ def derive_daily_columns(
             .otherwise(F.col(daily))
             .cast(dtypes[daily]),
         )
-    return out.drop(*[f"__nz_{d}" for d in cumulative_to_daily.values() if f"__nz_{d}" in out.columns])
+    return out.drop(*flags.columns)
 
 
 def round_geo(df: DataFrame, cols: tuple[str, str] = ("latitude", "longitude"), scale: int = 6) -> DataFrame:

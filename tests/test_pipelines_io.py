@@ -62,6 +62,90 @@ def test_star_schema_pipeline(spark, tmp_path):
     assert tables["Maladie"].first()["nom_maladie"] == "COVID-19"
 
 
+def _warehouse(spark, target: str) -> dict:
+    """{(disease, country, day): (nouveau_cas, nouveau_mort, total_cas)}"""
+    fact = spark.read.parquet(target)
+    maladie = spark.read.parquet(target + "__dims/maladie")
+    region = spark.read.parquet(target + "__dims/region")
+    rows = fact.join(maladie, "id_maladie").join(region, "id_region").collect()
+    return {
+        (r["nom_maladie"], r["nom_region"], r["date"].day):
+            (r["nouveau_cas"], r["nouveau_mort"], r["total_cas"])
+        for r in rows
+    }
+
+
+def test_warehouse_measure_types_survive_mixed_directories(spark, tmp_path):
+    """An integer-only CSV directory then an OWID-style JSON directory (its
+    totals are doubles) upserted into one warehouse: the partition they
+    share is rewritten, and the table must stay readable with one type
+    per measure."""
+    from etl_oms_spark.plans.pipelines import warehouse_directory_to_parquet
+
+    csv_dir, json_dir = tmp_path / "csv", tmp_path / "json"
+    csv_dir.mkdir()
+    json_dir.mkdir()
+    (csv_dir / "covid_daily.csv").write_text(
+        "Country/Region,Date,Confirmed,Deaths\n"
+        "France,2020-03-01,100,5\n"
+        "France,2020-03-02,150,7\n"
+    )
+    (json_dir / "monkeypox_owid.json").write_text(
+        '[{"location": "France", "date": "2020-03-02", "total_cases": 12.0,'
+        ' "total_deaths": 1.0, "new_cases": 3.0, "new_deaths": 1.0}]'
+    )
+    target = str(tmp_path / "warehouse")
+    warehouse_directory_to_parquet(spark, str(csv_dir), target)
+    warehouse_directory_to_parquet(spark, str(json_dir), target)
+
+    assert _warehouse(spark, target) == {
+        ("COVID-19", "France", 1): (0.0, 0.0, 100.0),
+        ("COVID-19", "France", 2): (50.0, 2.0, 150.0),
+        ("Monkeypox", "France", 2): (3.0, 1.0, 12.0),
+    }
+    measures = ["nouveau_mort", "nouveau_cas", "total_mort", "total_cas"]
+    assert {c: t for c, t in spark.read.parquet(target).dtypes if c in measures} == {
+        c: "double" for c in measures
+    }
+
+
+def test_warehouse_one_plan_for_every_disease(spark, tmp_path):
+    """EP3 builds one plan whatever the number of diseases, and still scopes
+    the all-zero guard per disease: covid's reported dailies stay, the
+    zero-reporting diseases get lag-derived ones."""
+    from etl_oms_spark.plans.pipelines import warehouse_directory_to_parquet
+    from etl_oms_spark.util import plan_stats
+
+    header = "Country/Region,Date,Confirmed,Deaths,New cases,New deaths\n"
+    files = {
+        "covid.csv": ("COVID-19", [(100, 10, 7, 1), (150, 12, 8, 2), (180, 15, 9, 3)]),
+        "monkeypox.csv": ("Monkeypox", [(10, 1, 0, 0), (12, 2, 0, 0), (15, 4, 0, 0)]),
+        "ebola.csv": ("Ebola", [(1, 0, 0, 0), (4, 1, 0, 0), (9, 3, 0, 0)]),
+    }
+    derived = {
+        "COVID-19": [(7.0, 1.0), (8.0, 2.0), (9.0, 3.0)],  # as reported
+        "Monkeypox": [(0.0, 0.0), (2.0, 1.0), (3.0, 2.0)],
+        "Ebola": [(0.0, 0.0), (3.0, 1.0), (5.0, 2.0)],
+    }
+    exchanges = []
+    for n in (1, 2, 3):
+        directory = tmp_path / f"in{n}"
+        directory.mkdir()
+        want = {}
+        for name, (disease, rows) in list(files.items())[:n]:
+            (directory / name).write_text(header + "".join(
+                f"France,2020-03-0{day + 1},{c},{d},{nc},{nd}\n"
+                for day, (c, d, nc, nd) in enumerate(rows)
+            ))
+            for day, ((c, _d, _nc, _nd), (cas, mort)) in enumerate(zip(rows, derived[disease])):
+                want[(disease, "France", day + 1)] = (cas, mort, float(c))
+        target = str(tmp_path / f"warehouse{n}")
+        updates, _ = warehouse_directory_to_parquet(spark, str(directory), target)
+        assert _warehouse(spark, target) == want
+        exchanges.append(plan_stats(updates)["exchanges"])
+    assert exchanges[0] == exchanges[1] == exchanges[2], exchanges
+
+
 def test_csv_json_roundtrip(spark, tmp_path):
     df = read_csv(spark, _wide_csv(tmp_path))
     cpath, jpath = str(tmp_path / "out_csv"), str(tmp_path / "out_json")
@@ -157,7 +241,7 @@ def test_read_csv_tolerant_quarantines_bad_rows(spark, tmp_path):
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from etl_oms_spark.sources.readers import read_csv_tolerant
+    from etl_oms_spark.sources.readers import read_csv_robust
 
     p = tmp_path / "dirty.csv"
     p.write_text(
@@ -172,7 +256,7 @@ def test_read_csv_tolerant_quarantines_bad_rows(spark, tmp_path):
             T.StructField("confirmed", T.LongType()),
         ]
     )
-    df = read_csv_tolerant(spark, str(p), schema).cache()
+    df = read_csv_robust(spark, str(p), schema=schema).cache()
     good = df.filter(F.col("_corrupt_record").isNull())
     bad = df.filter(F.col("_corrupt_record").isNotNull())
     assert {r["country"]: r["confirmed"] for r in good.collect()} == {

@@ -10,6 +10,7 @@ from etl_oms_spark.merge import merge_dataframes, upsert_coalesce_nulls
 from etl_oms_spark.reshape import melt, melt_with_units, pivot_wide
 from etl_oms_spark.star import (
     build_fact,
+    build_maladie,
     build_pays,
     build_region,
     grow_dimension,
@@ -42,10 +43,11 @@ def test_surrogate_keys_contiguous_ordered(spark):
 
 
 def test_star_schema_build(spark):
-    df = _canonical(spark)
+    df = _canonical(spark).withColumn("pandemic", F.lit("COVID-19"))
     pays = build_pays(df)
     region = build_region(pays)
-    fact = build_fact(df, pays, region)
+    maladie = build_maladie(spark, ["COVID-19"])
+    fact = build_fact(df, pays, region, maladie)
     rows = fact.orderBy("id_region", "date").collect()
     assert len(rows) == 3
     r0 = rows[0]
