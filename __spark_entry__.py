@@ -38,6 +38,7 @@ if _HERE not in os.environ.get("PYTHONPATH", ""):
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_oms_spark.catalog import _read_table
 from etl_oms_spark.merge import merge_dataframes
 from etl_oms_spark.reconcile import complete_missing_columns, disease_from_name
 from etl_oms_spark.reshape import melt, pivot_wide
@@ -57,38 +58,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Read the events table, tolerating nanosecond parquet timestamps.
-
-    The testdata stores ``ts`` as TIMESTAMP(NANOS), which Spark's parquet
-    reader rejects; with ``spark.sql.legacy.parquet.nanosAsLong`` the column
-    arrives as epoch-nanos LongType and is converted back to a proper
-    TimestampType in-plan (microsecond floor — matches DuckDB's ns→us read).
-    """
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:  # noqa: BLE001 - conf not recognized on some versions
-        pass
-    df = _t(spark, sf_dir, "events")
-    return _rebuild_ts(df)
-
-
-def _rebuild_ts(df: DataFrame) -> DataFrame:
-    """The extracted ts-normalization half of `_events`: nanos-long →
-    TimestampType via integer DIV, TIMESTAMP_NTZ → TimestampType cast
-    (session tz is UTC). The streaming readers handle ts inline at their
-    readStream sites (a file-stream schema is pinned before this helper
-    could see it), so this is the BATCH half only."""
-    from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
-
-    if isinstance(df.schema["ts"].dataType, LongType):
-        # integer DIV — epoch-nanos exceed double's exact-integer range
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    elif isinstance(df.schema["ts"].dataType, TimestampNTZType):
-        # newer testdata stores TIMESTAMP(MICROS) without a zone; session tz
-        # is UTC so this cast is value-preserving and keeps one ts type
-        # across all query plans (window(), lag, oracle comparisons)
-        df = df.withColumn("ts", F.col("ts").cast(TimestampType()))
-    return df
+    """Read the events table with ``ts`` as TimestampType: the catalog's
+    one events rule (nanosecond parquet timestamps rebuilt in-plan)."""
+    return _read_table(spark, sf_dir, "events")
 
 
 def _cents(c: Column, scale: int = 100) -> Column:

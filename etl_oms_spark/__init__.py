@@ -22,7 +22,8 @@ Module map
 - star           dimension + fact builders (star schema)
 - merge          upsert/merge semantics (keep-last dedup, full-outer merge)
 - sources.readers   CSV/JSON/parquet/directory scans, JDBC dim reads
-- sources.writers   CSV/JSON/parquet sinks, JDBC staging+upsert sink
+- sources.writers   CSV/JSON sinks, bucketed tables, JSONL shard export,
+                    JDBC staging+upsert sink
 - operators.dedup        exact / minhash-LSH / simhash / n-gram-jaccard /
                          containment dedup; PPJoin prefix-filter join,
                          bloom decontamination, substring spans + repair
@@ -37,10 +38,11 @@ Module map
 - operators.graph        connected components, transitive dedup closure,
                          k-core peeling, multi-source BFS
 - operators.sampling     hash-stable sampling / train-test splits
-- sources.merge_table    partition-pruned parquet MERGE + compaction
+- sources.merge_table    partition-pruned parquet MERGE, CDC merge,
+                         aggregate refresh
 - streaming.events       windows/watermarks, dedup-within-watermark,
-                         stream-static enrichment, foreachBatch merge,
-                         applyInPandasWithState profiles
+                         foreachBatch merge, applyInPandasWithState
+                         profiles
 - streaming.joins        stream-stream interval join (batch-twin exact)
 - catalog                temp-view registration + SQL surface
 - util                   parallelism guard, salted join, plan introspection

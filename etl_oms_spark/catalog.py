@@ -24,8 +24,8 @@ def register_dataset(
 ) -> list[str]:
     """Register each parquet table in ``sf_dir`` as a temp view.
 
-    Returns the registered names. The events nanos-timestamp quirk is
-    handled the same way the contract does (legacy conf + in-plan rebuild).
+    Returns the registered names. ``events`` goes through `_read_table`'s
+    nanos-timestamp rule, the same read the contract queries use.
     """
     registered = []
     for name in tables or TESTDATA_TABLES:
@@ -39,6 +39,11 @@ def register_dataset(
 
 
 def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One testdata table. ``events`` stores ``ts`` as TIMESTAMP(NANOS),
+    which Spark's parquet reader rejects; with
+    ``spark.sql.legacy.parquet.nanosAsLong`` it arrives as epoch-nanos and
+    is rebuilt as TimestampType in-plan (microsecond floor, matching
+    DuckDB's ns→us read)."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
 

@@ -104,24 +104,6 @@ def linear_scores(
     )
 
 
-def classifier_filter(
-    df: DataFrame,
-    weights: DataFrame,
-    min_margin_q: int = 0,
-    n_buckets: int = 1024,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Keep documents the classifier scores above ``min_margin_q`` — a
-    pure filter join (left-semi), no global sort."""
-    keep = (
-        linear_scores(df, weights, n_buckets, text_col=text_col, id_col=id_col)
-        .filter(F.col("margin_q") > min_margin_q)
-        .select(id_col)
-    )
-    return df.join(keep, id_col, "left_semi")
-
-
 def select_top_fraction(
     df: DataFrame,
     weights: DataFrame,

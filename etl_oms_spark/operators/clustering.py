@@ -284,23 +284,6 @@ def semantic_dedup_pairs(
     )
 
 
-def semantic_dedup(
-    df: DataFrame,
-    k: int = 8,
-    n_iter: int = 2,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Drop every vector ≥ threshold-cosine-similar to a lower-id vector in
-    its cluster (greedy min-id-survives, same policy as minhash_dedup)."""
-    victims = (
-        semantic_dedup_pairs(df, k, n_iter, threshold, id_col, vec_col)
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
-    )
-    return df.join(victims, id_col, "left_anti")
-
 def cluster_stats(
     assigned: DataFrame,
     id_col: str = "vec_id",
@@ -346,29 +329,6 @@ def cluster_stats(
             F.coalesce(F.col("n_outliers"), F.lit(0)).cast("long").alias("n_outliers"),
         )
     )
-
-
-def prune_outliers(
-    df: DataFrame,
-    k: int = 8,
-    n_iter: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Drop vectors whose dist2 to their centroid exceeds 2× the cluster
-    mean (exact integer rule) — the cheap semantic-outlier filter run
-    before similarity search or SemDeDup."""
-    assigned = kmeans_assign(df, kmeans_fit(df, k, n_iter, id_col, vec_col),
-                             id_col, vec_col)
-    per = assigned.groupBy("cluster").agg(
-        F.count(F.lit(1)).alias("__n"), F.sum("dist2").alias("__s")
-    )
-    keep = (
-        assigned.join(F.broadcast(per), "cluster")
-        .filter(F.col("dist2") * F.col("__n") <= F.lit(2) * F.col("__s"))
-        .select(id_col)
-    )
-    return df.join(keep, id_col, "left_semi")
 
 
 def label_centroid_similarity(

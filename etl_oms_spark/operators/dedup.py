@@ -537,19 +537,6 @@ def contamination_ids(
     )
 
 
-def suggest_bloom_bits(n_items: int, fpp: float = 0.01) -> tuple[int, int]:
-    """Standard Bloom sizing: bits m = -n·ln(p)/ln(2)², hashes k = m/n·ln(2),
-    with m rounded up to a whole number of 64-bit words. Returns
-    ``(num_bits, num_hashes)``."""
-    import math
-
-    n = max(int(n_items), 1)
-    m = int(math.ceil(-n * math.log(fpp) / (math.log(2) ** 2)))
-    m = ((m + 63) // 64) * 64
-    h = max(1, round(m / n * math.log(2)))
-    return m, h
-
-
 def _bloom_positions(col: Column, num_bits: int, num_hashes: int) -> list[Column]:
     """The ``num_hashes`` deterministic bit positions of a value: seeded
     xxhash64 (JVM, no UDF) reduced mod ``num_bits``. Purely internal — the

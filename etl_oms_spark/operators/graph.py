@@ -543,27 +543,6 @@ def label_propagation(
     return labels.select(F.col(id_col), F.col("__lbl").alias(label_col))
 
 
-def build_neardup_graph(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_method: str = "xxhash64",
-    persist: bool = True,
-) -> DataFrame:
-    """Build the near-duplicate candidate graph ONCE for the whole graph
-    toolkit (connected_components, triangle_count, pagerank_quantized,
-    label_propagation all take an edge list): minhash signatures →
-    banded LSH pairs, optionally persisted so N downstream analyses pay
-    the shingle/signature cost a single time instead of once each —
-    at corpus scale the pair build dominates every individual analysis
-    (SCALING.md, lp1 note)."""
-    from .dedup import lsh_candidate_pairs, minhash_signatures
-
-    sigs = minhash_signatures(df, text_col, id_col, hash_method=hash_method)
-    pairs = lsh_candidate_pairs(sigs, id_col, hash_method=hash_method)
-    return pairs.persist() if persist else pairs
-
-
 def k_core(
     edges: DataFrame,
     k: int = 3,

@@ -4,13 +4,13 @@ Design (the part that must be right at 100 TB):
 
 - media are **opaque binary columns** + a typed metadata struct — never
   driver-side bytes, never Python round trips per row.
-- decode / feature-extract / resize / frame-sample run as **Arrow-batched
-  ``mapInPandas``**: the schema, batch shape, partitioning, and UDF
-  signatures here are real and tested; only the codec call itself is
-  stubbed (no image/audio libs in this container) behind
-  ``decoder="fake"`` (deterministic header parse, used by tests) or
-  ``decoder="pil"``-style hooks that raise ``NotImplementedError`` until a
-  real library is wired in.
+- decode and feature-extract run as **Arrow-batched ``mapInPandas``**:
+  the schema, batch shape, partitioning, and UDF signatures here are real
+  and tested. ``decode_media_metadata`` parses the FAKE header
+  (``decoder="fake"``, deterministic, used by tests) or decodes real image
+  bytes with Pillow (``decoder="pil"``, gated on the import);
+  ``extract_features`` computes a deterministic byte histogram in place of
+  a model.
 - batch size is controlled by ``spark.sql.execution.arrow.maxRecordsPerBatch``
   — large payloads want a small cap (e.g. 64) so a batch of 100 MB videos
   doesn't OOM an executor; set it before calling these.
@@ -52,16 +52,6 @@ def make_fake_payload(width: int, height: int, channels: int = 3) -> bytes:
     )
 
 
-def _parse_fake(payload: bytes) -> tuple[int, int, int]:
-    if payload is None or len(payload) < 13 or payload[:4] != b"FAKE":
-        raise ValueError("not a FAKE payload")
-    return (
-        int.from_bytes(payload[4:8], "big"),
-        int.from_bytes(payload[8:12], "big"),
-        payload[12],
-    )
-
-
 def decode_media_metadata(
     df: DataFrame,
     payload_col: str = "payload",
@@ -91,8 +81,8 @@ def decode_media_metadata(
         )
     out_schema = T.StructType(list(df.schema.fields) + [T.StructField("meta", MEDIA_META_SCHEMA)])
 
-    # nested copy of the header parser: the closure must be SELF-CONTAINED
-    # so cloudpickle ships it by value — a module-global reference would
+    # the header parser is nested: the closure must be SELF-CONTAINED so
+    # cloudpickle ships it by value — a module-global reference would
     # require this package to be importable on every Python worker, which
     # fails when the contract is loaded by file path from a foreign cwd
     def parse_fake(payload: bytes) -> tuple[int, int, int]:
@@ -160,17 +150,14 @@ def extract_features(
     df: DataFrame,
     payload_col: str = "payload",
     dim: int = 16,
-    decoder: str = "fake",
 ) -> DataFrame:
     """Media → feature vector (array<float>), Arrow-batched.
 
-    Fake path: deterministic byte-histogram features so downstream ANN /
-    dedup plumbing can run end-to-end. A real model swaps in behind the
-    same ``mapInPandas`` contract (load model once per worker in the
-    generator body, batch through it).
+    Deterministic byte-histogram features so downstream ANN / dedup
+    plumbing can run end-to-end. A real model swaps in behind the same
+    ``mapInPandas`` contract (load model once per worker in the generator
+    body, batch through it).
     """
-    if decoder != "fake":
-        raise NotImplementedError("real feature extractors not available here")
     out_schema = T.StructType(
         list(df.schema.fields) + [T.StructField("features", T.ArrayType(T.FloatType()))]
     )
@@ -193,99 +180,6 @@ def extract_features(
     return df.mapInPandas(featurize, schema=out_schema)
 
 
-def frame_sample_plan(
-    df: DataFrame,
-    every_n: int = 10,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Video → sampled frame rows (plumbing: one input row fans out to
-    ceil(n_frames / every_n) rows). Fake decoder treats each 16-byte body
-    chunk as a 'frame'."""
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("frame_index", T.IntegerType()),
-            T.StructField("frame", T.BinaryType()),
-        ]
-    )
-
-    stride = 16 * every_n
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # column-wise zip, not iterrows: no per-row pandas Series
-        # construction, and only the SAMPLED frames are sliced (offsets
-        # jump straight to every_n-th frame instead of materializing all
-        # 16-byte chunks first). A real decoder needs its per-payload
-        # loop; this fake path stays proportional to output size.
-        for pdf in batches:
-            out_ids, out_idx, out_frames = [], [], []
-            for doc, payload in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(payload) if payload is not None else b""
-                body = b[13:] if b[:4] == b"FAKE" else b
-                for off in range(0, len(body), stride):
-                    out_ids.append(doc)
-                    out_idx.append(off // 16)
-                    out_frames.append(body[off : off + 16])
-            yield pd.DataFrame(
-                {id_col: out_ids, "frame_index": out_idx, "frame": out_frames}
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(sample, schema=out_schema)
-
-
-def resize_media(
-    df: DataFrame,
-    target_width: int,
-    target_height: int,
-    payload_col: str = "payload",
-    decoder: str = "fake",
-) -> DataFrame:
-    """Resize media payloads in place (same column name, new bytes),
-    Arrow-batched.
-
-    The fake path rewrites the FAKE header to the target dimensions and
-    nearest-neighbor-samples the body to ``min(target pixels, body len)``
-    bytes — deterministic, so tests can assert exact output. A real
-    implementation (PIL/libvips) swaps in behind the same signature; the
-    batch-size note in the module docstring matters most here, since input
-    AND output payloads coexist in one Arrow batch.
-    """
-    if decoder != "fake":
-        raise NotImplementedError("real codecs not available here")
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for payload in pdf[payload_col]:
-                b = bytes(payload) if payload is not None else None
-                if b is None or len(b) < 13 or b[:4] != b"FAKE":
-                    out.append(b)  # pass through undecodable payloads
-                    continue
-                channels = b[12]
-                body = b[13:]
-                n_out = min(target_width * target_height, len(body))
-                if n_out and len(body):
-                    # nearest-neighbor index mapping, exact integer math
-                    sampled = bytes(
-                        body[(i * len(body)) // n_out] for i in range(n_out)
-                    )
-                else:
-                    sampled = b""
-                out.append(
-                    b"FAKE"
-                    + target_width.to_bytes(4, "big")
-                    + target_height.to_bytes(4, "big")
-                    + bytes([channels])
-                    + sampled
-                )
-            pdf = pdf.copy()
-            pdf[payload_col] = out
-            yield pdf
-
-    return df.mapInPandas(resize, schema=df.schema)
-
-
 def with_media_column(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Testdata helper: synthesize a binary media column from text so the
     multimodal plumbing can run against the documents table."""
@@ -300,65 +194,3 @@ def with_media_column(df: DataFrame, text_col: str = "text") -> DataFrame:
             F.encode(F.col(text_col), "UTF-8"),
         ),
     )
-
-
-def extract_features_arrow(
-    df: DataFrame,
-    payload_col: str = "payload",
-    dim: int = 16,
-    decoder: str = "fake",
-) -> DataFrame:
-    """`extract_features`' ``mapInArrow`` twin — bit-identical output,
-    zero pandas materialization: batches arrive as raw Arrow
-    RecordBatches and the byte histograms are computed with ONE segmented
-    ``np.bincount`` over the binary column's value buffer (byte%dim +
-    row·dim composite keys), so there is no per-row Python at all. The
-    shape a real fleet uses when payload batches are large enough that
-    even the pandas conversion overhead matters.
-    """
-    if decoder != "fake":
-        raise NotImplementedError("real feature extractors not available here")
-    import numpy as np
-    import pyarrow as pa
-
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField("features", T.ArrayType(T.FloatType()))]
-    )
-
-    def featurize(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            n = batch.num_rows
-            col = batch.column(batch.schema.get_field_index(payload_col))
-            # normalize to large_binary for a single (offsets, data) view
-            arr = pa.chunked_array([col]).combine_chunks().cast(pa.large_binary())
-            offsets = np.frombuffer(arr.buffers()[1], dtype=np.int64)[
-                arr.offset : arr.offset + n + 1
-            ]
-            data = np.frombuffer(arr.buffers()[2] or b"", dtype=np.uint8)
-            lengths = np.diff(offsets)
-            if arr.null_count:
-                valid = np.asarray(arr.is_valid())
-                lengths = np.where(valid, lengths, 0)
-            row_of_byte = np.repeat(np.arange(n, dtype=np.int64), lengths)
-            byte_vals = np.concatenate(
-                [
-                    data[offsets[i] : offsets[i] + lengths[i]]
-                    for i in range(n)
-                ]
-            ) if arr.null_count else data[offsets[0] : offsets[-1]]
-            keys = row_of_byte * dim + (byte_vals.astype(np.int64) % dim)
-            hist = np.bincount(keys, minlength=n * dim).reshape(n, dim)
-            totals = hist.sum(axis=1, keepdims=True).astype(np.float64)
-            totals[totals == 0.0] = 1.0
-            feats = (hist.astype(np.float64) / totals).astype(np.float32)
-            feat_arr = pa.ListArray.from_arrays(
-                pa.array(np.arange(0, (n + 1) * dim, dim, dtype=np.int32)),
-                pa.array(feats.reshape(-1)),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(batch.num_columns)] + [feat_arr],
-                names=list(batch.schema.names) + ["features"],
-            )
-
-    return df.mapInArrow(featurize, schema=out_schema)

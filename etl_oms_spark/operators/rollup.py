@@ -80,14 +80,6 @@ def time_rollup(
     return out
 
 
-def with_avg(tier: DataFrame) -> DataFrame:
-    """Derived average at read time (sum/count — exact operands)."""
-    return tier.withColumn(
-        "avg_value",
-        F.col("value_cents") / F.lit(100.0) / F.col("n_events"),
-    )
-
-
 def refresh_rollup(
     target_path: str,
     new_events: DataFrame,

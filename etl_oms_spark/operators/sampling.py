@@ -50,17 +50,6 @@ def _bucket(key: Column, salt: str, method: str) -> Column:
     raise ValueError(f"unknown hash method {method!r} (use 'xxhash64' or 'md5')")
 
 
-def deterministic_sample(
-    df: DataFrame, rate: float, key_col: str, salt: str = "sample",
-    method: str = "xxhash64",
-) -> DataFrame:
-    """Keep ~``rate`` of rows, chosen by key hash — reproducible and
-    consistent across keys: the same key is either always in or always out
-    (useful for user-level sampling where all of a user's rows must move
-    together — pass the user id as the key)."""
-    return df.filter(_bucket(F.col(key_col), salt, method) < int(rate * _BUCKETS))
-
-
 def train_test_split(
     df: DataFrame,
     test_rate: float = 0.1,

@@ -48,12 +48,3 @@ class PipelineMetrics:
         """Metrics per stage — call AFTER the action has completed (an
         Observation blocks until its point has been evaluated)."""
         return {name: dict(o.get) for name, o in self._obs.items()}
-
-
-def observed_write_parquet(
-    df: DataFrame, path: str, stages: PipelineMetrics, mode: str = "overwrite"
-) -> dict[str, dict]:
-    """Write + return the full stage report: the bilan of the reference's
-    run counters, produced by the single write action."""
-    df.write.mode(mode).parquet(path)
-    return stages.report()

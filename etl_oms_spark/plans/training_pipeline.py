@@ -94,24 +94,6 @@ def curate_documents_with_split(
     )
 
 
-def write_curated(
-    train: DataFrame,
-    test: DataFrame,
-    path: str,
-    partition_cols: list[str] | None = None,
-) -> None:
-    """Materialize with a split/lang partition layout so downstream readers
-    prune to one split (and optionally one language) per job."""
-    partition_cols = partition_cols or ["split", "lang_pred"]
-    # NOTE: if both frames derive from one curate_documents call, the
-    # union re-evaluates the shared upstream once per side; prefer
-    # curate_documents_with_split + write_curated_single for one pass.
-    out = train.withColumn("split", F.lit("train")).unionByName(
-        test.withColumn("split", F.lit("test"))
-    )
-    out.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-
-
 def write_curated_single(
     curated: DataFrame,
     path: str,

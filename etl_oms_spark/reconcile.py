@@ -90,39 +90,19 @@ def apply_flexible_mapping(
 def complete_missing_columns(
     df: DataFrame,
     required: list[str] | None = None,
-    defaults: dict[str, Column] | None = None,
 ) -> DataFrame:
-    """Add absent canonical columns (P3).
-
-    Default regime is the v1/v4 one: absent column → typed NULL
-    (ETL_OMS.py:65-67, ETL_OMS_OPERATIONNEL.py:89-93). Pass ``defaults``
-    to emulate the v3 regime of typed default values
-    (ETL_OMS_FINAL_Upgraded.py:70-79: country→"Unknown", date→now(),
-    measures→0), e.g. ``{"country": F.lit("Unknown"), "date":
-    F.current_timestamp(), "confirmed": F.lit(0), ...}``.
-    """
+    """Add absent canonical columns (P3) as typed NULLs — the v1/v4 regime
+    (ETL_OMS.py:65-67, ETL_OMS_OPERATIONNEL.py:89-93)."""
     required = required or STANDARD_COLUMNS
-    defaults = defaults or {}
     types = {f.name: f.dataType for f in CANONICAL_SCHEMA.fields}
     missing = [c for c in required if c not in df.columns]
     if not missing:
         return df
     adds = {
-        c: defaults.get(c, F.lit(None)).cast(types.get(c, T.StringType()))
+        c: F.lit(None).cast(types.get(c, T.StringType()))
         for c in missing
     }
     return df.withColumns(adds)
-
-
-def v3_defaults() -> dict[str, Column]:
-    """The v3 default-value regime (ETL_OMS_FINAL_Upgraded.py:70-79)."""
-    out: dict[str, Column] = {
-        "country": F.lit("Unknown"),
-        "date": F.current_timestamp(),
-    }
-    for c in STANDARD_COLUMNS[2:]:
-        out[c] = F.lit(0)
-    return out
 
 
 def disease_from_name(name_col: Column, keywords: dict[str, str] | None = None) -> Column:
@@ -143,24 +123,14 @@ def disease_from_name(name_col: Column, keywords: dict[str, str] | None = None) 
     return expr.otherwise(F.lit(DISEASE_DEFAULT))
 
 
-def tag_disease_from_filename(df: DataFrame, out_col: str = "pandemic") -> DataFrame:
-    """Tag each row with the disease inferred from its source file name.
-
-    Uses ``input_file_name()`` so a multi-file directory scan keeps per-file
-    provenance without a per-file driver loop (S3+S4).
-    """
-    return df.withColumn(out_col, disease_from_name(F.input_file_name()))
-
-
 def reconcile(
     df: DataFrame,
     pandemic: str | None = None,
     required: list[str] | None = None,
-    defaults: dict[str, Column] | None = None,
 ) -> DataFrame:
     """Full reconciliation pass: rename → complete → optional literal tag."""
     out = apply_flexible_mapping(df)
-    out = complete_missing_columns(out, required=required, defaults=defaults)
+    out = complete_missing_columns(out, required=required)
     if pandemic is not None:
         out = out.withColumn("pandemic", F.lit(pandemic))
     return out

@@ -128,24 +128,3 @@ RATE_SUFFIXES: dict[str, int] = {
     "per_million": 1_000_000,
     "per_1m_population": 1_000_000,
 }
-
-
-def schema_drift_report(old: "DataFrame | list[tuple[str, str]]", new: "DataFrame"):
-    """Schema-evolution diff between an expected schema and an incoming
-    frame: [(column, status ∈ added|removed|type_changed, old_type,
-    new_type)]. The ingest-time guard that turns tomorrow's silently-
-    reshaped upstream CSV (the failure mode the reference's synonym map
-    exists to absorb — SURVEY §2.2 P2) into an explicit report instead of
-    a downstream type error. Pure metadata — no data is read."""
-    old_types = dict(old if isinstance(old, list) else old.dtypes)
-    new_types = dict(new.dtypes)
-    out = []
-    for c, t in new_types.items():
-        if c not in old_types:
-            out.append((c, "added", None, t))
-        elif old_types[c] != t:
-            out.append((c, "type_changed", old_types[c], t))
-    for c, t in old_types.items():
-        if c not in new_types:
-            out.append((c, "removed", t, None))
-    return sorted(out)

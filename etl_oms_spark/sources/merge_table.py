@@ -91,25 +91,6 @@ def merge_into_parquet(
     _swap_partitions(spark, target_path, updates, partition_col, combine)
 
 
-def compact_partitions(
-    spark: SparkSession,
-    path: str,
-    partition_col: str,
-) -> None:
-    """Small-file compaction: rewrite each partition value into one file
-    (hash-repartition on the partition column → one task per value).
-    Streaming/micro-batch upserts accrete small files; periodic compaction
-    keeps scan task counts sane. The frame is materialized
-    (localCheckpoint) before the in-place overwrite — read-overwrite
-    hazard, same as the merge path."""
-    df = (
-        spark.read.parquet(path)
-        .repartition(F.col(partition_col))
-        .localCheckpoint(eager=True)
-    )
-    _overwrite_partitions(df, path, partition_col)
-
-
 def _delete_partition_dirs(
     spark: SparkSession,
     target_path: str,
@@ -228,36 +209,3 @@ def refresh_aggregate(
         )
 
     _swap_partitions(spark, agg_path, partials, partition_col, combine)
-
-
-def vacuum_table(path: str) -> dict:
-    """Remove job debris from a parquet merge-table directory: Spark's
-    ``_temporary`` staging dirs (left by aborted/killed writes) and empty
-    partition directories (left when a partition's last rows were
-    deleted). Committed data files are NEVER touched — the cleaner only
-    deletes names matching the staging pattern or directories with no
-    files under them. Returns {"temp_dirs": n, "empty_dirs": n}.
-
-    The lakehouse-less analogue of VACUUM: safe to run any time because
-    dynamic partition overwrite only publishes complete partitions, so
-    anything matching the debris patterns is by construction unreadable
-    by Spark's committed-file protocol.
-    """
-    import os
-    import shutil
-
-    stats = {"temp_dirs": 0, "empty_dirs": 0}
-    if not os.path.isdir(path):
-        return stats
-    for root, dirs, _files in os.walk(path, topdown=True):
-        for d in list(dirs):
-            if d == "_temporary" or d.startswith(".spark-staging"):
-                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-                dirs.remove(d)
-                stats["temp_dirs"] += 1
-    # bottom-up pass for empties (a partition dir whose files were removed)
-    for root, dirs, files in os.walk(path, topdown=False):
-        if root != path and not dirs and not files:
-            os.rmdir(root)
-            stats["empty_dirs"] += 1
-    return stats

@@ -67,13 +67,6 @@ def read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
         raise
 
 
-def read_orc(spark: SparkSession, path: str, merge_schema: bool = False) -> DataFrame:
-    """ORC scan (Spark-native columnar alternative to parquet — same
-    predicate pushdown / column pruning / partition pruning behavior;
-    ``merge_schema`` reconciles files written under evolving schemas)."""
-    return spark.read.option("mergeSchema", str(merge_schema).lower()).orc(path)
-
-
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver testdata table (TESTDATA.md layout)."""
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
@@ -152,58 +145,6 @@ def read_dbapi_dim(
     return spark.createDataFrame(rows, schema if schema is not None else names)
 
 
-def read_csv_robust(
-    spark: SparkSession,
-    path: str,
-    schema=None,
-    corrupt_col: str = "_corrupt_record",
-    **options,
-) -> DataFrame:
-    """S1 with explicit bad-row capture instead of silent failure.
-
-    The reference wraps its whole pipeline in a blanket try/except
-    (ETL_OMS.py:89-100) — one bad row kills the file. Spark's PERMISSIVE
-    mode keeps good rows and lands unparseable ones in ``corrupt_col`` so
-    the pipeline can count/quarantine them (A7 bilan) and continue. Pass an
-    explicit ``schema`` for the corrupt column to be populated (with
-    inferSchema the malformed row itself would distort inference).
-    """
-    opts = {
-        "header": "true",
-        "mode": "PERMISSIVE",
-        "columnNameOfCorruptRecord": corrupt_col,
-        **({} if schema else {"inferSchema": "true"}),
-        **options,
-    }
-    reader = spark.read.options(**opts)
-    if schema is not None:
-        from pyspark.sql import types as T
-
-        if corrupt_col not in [f.name for f in schema.fields]:
-            schema = T.StructType(
-                list(schema.fields) + [T.StructField(corrupt_col, T.StringType())]
-            )
-        reader = reader.schema(schema)
-    return reader.csv(path)
-
-
-def split_corrupt(
-    df: DataFrame, corrupt_col: str = "_corrupt_record"
-) -> tuple[DataFrame, DataFrame]:
-    """(clean_rows, quarantined_rows) — quarantine keeps the raw record for
-    reprocessing; clean side drops the bookkeeping column.
-
-    The parsed frame is cached first: Spark disallows queries that touch
-    only the internal corrupt-record column on a raw file scan
-    (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN) — and the cache
-    also guarantees both sides see one consistent parse.
-    """
-    df = df.cache()
-    clean = df.filter(F.col(corrupt_col).isNull()).drop(corrupt_col)
-    bad = df.filter(F.col(corrupt_col).isNotNull())
-    return clean, bad
-
-
 def read_any(spark: SparkSession, path: str, fmt: str | None = None, schema=None, **options) -> DataFrame:
     """Format-dispatching reader: csv / json / parquet / orc (all built-in
     Spark sources — vectorized, splittable, predicate-pushdown for the
@@ -221,32 +162,6 @@ def read_any(spark: SparkSession, path: str, fmt: str | None = None, schema=None
             reader = reader.schema(schema)
         return reader.format(fmt).load(path)
     raise ValueError(f"unsupported format: {fmt!r}")
-
-
-def read_binary_dir(
-    spark: SparkSession,
-    path: str,
-    glob: str | None = None,
-    max_bytes: int | None = None,
-) -> DataFrame:
-    """Raw-bytes ingestion via Spark's built-in ``binaryFile`` source:
-    (path, modificationTime, length, content binary) — the entry point for
-    the multimodal pipeline (operators/multimodal.py decodes the
-    ``content`` column with Arrow-batched mapInPandas).
-
-    ``glob`` filters filenames (e.g. ``*.png``); ``max_bytes`` pushes a
-    length predicate down to the file listing so oversized blobs are never
-    read. At scale prefer many medium files over millions of tiny ones
-    (listing cost) or a few huge ones (a file is the split unit here —
-    binary content is not splittable).
-    """
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    df = reader.load(path)
-    if max_bytes is not None:
-        df = df.filter(F.col("length") <= max_bytes)
-    return df
 
 
 def ingest_new_files(

@@ -38,20 +38,6 @@ def write_json(df: DataFrame, path: str, single_file: bool = False, mode: str = 
     out.write.mode(mode).json(path)
 
 
-def write_orc(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """ORC sink — the parquet twin for ORC-standardized warehouses; same
-    partition-pruning story as ``write_parquet``."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.orc(path)
-
-
 def write_json_records(
     df: DataFrame, path: str, max_rows: int = 1_000_000
 ) -> None:
@@ -78,23 +64,6 @@ def write_json_records(
             "splittable, distributed) for large outputs"
         )
     pdf.to_json(path, orient="records", date_format="iso")
-
-
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Parquet sink — the engine's native interchange format.
-
-    ``partition_by`` (e.g. date) enables partition pruning for downstream
-    range predicates (P7) at any scale.
-    """
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
 
 
 def write_jdbc_staging(
@@ -270,53 +239,6 @@ def write_bucketed_table(
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.saveAsTable(table)
-
-
-def write_any(
-    df: DataFrame,
-    path: str,
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-    **options,
-) -> None:
-    """Format-dispatching writer (csv / json / parquet / orc). Columnar
-    formats take ``partition_by`` for pruned downstream scans; csv/json
-    ignore it only in the sense that the reference's flat-file outputs
-    never partitioned either — pass it and they partition too."""
-    if fmt == "csv":
-        options = {"header": True, **options}
-    writer = df.write.mode(mode).options(**options)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.format(fmt).save(path)
-
-
-def write_sorted_parquet(
-    df: DataFrame,
-    path: str,
-    order_cols: list[str],
-    n_files: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Globally-ordered parquet without a global sort: ``repartitionByRange``
-    samples the order keys and gives each output file a disjoint,
-    monotonically increasing key range (part-00000 < part-00001 < ...),
-    then ``sortWithinPartitions`` orders rows inside each file.
-
-    Total cost = one range exchange + per-partition sorts — the 100 TB
-    form of ORDER BY ... writes (a single-partition global sort would
-    serialize the table through one task). Ordered files give parquet
-    min/max row-group stats their full pruning power for range predicates
-    on the sort key, and give training-data loaders a deterministic
-    global read order (pair with a deterministic-shuffle rank key, sh1).
-    """
-    out = (
-        df.repartitionByRange(n_files, *order_cols)
-        if n_files
-        else df.repartitionByRange(*order_cols)
-    )
-    out.sortWithinPartitions(*order_cols).write.mode(mode).parquet(path)
 
 
 def export_jsonl_shards(

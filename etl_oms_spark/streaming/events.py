@@ -176,15 +176,6 @@ def session_window_agg(
     )
 
 
-def enrich_stream(stream_df: DataFrame, dim: DataFrame, on: str) -> DataFrame:
-    """Stream-static broadcast enrichment join: the streaming form of the
-    reference's dict-cached dim lookup (J3). The static side is re-read per
-    micro-batch (picks up dim updates); broadcast keeps it shuffle-free."""
-    from pyspark.sql import functions as F
-
-    return stream_df.join(F.broadcast(dim), on, "left")
-
-
 def join_streams(
     left: DataFrame,
     right: DataFrame,
@@ -274,33 +265,6 @@ def stateful_user_profiles(stream_df: DataFrame) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def foreach_batch_cdc(
-    target_path: str,
-    keys: list[str],
-    spark: SparkSession,
-    partition_col: str,
-    ts_col: str = "ts",
-    op_col: str = "op",
-) -> Callable[[DataFrame, int], None]:
-    """foreachBatch CDC apply: replay each micro-batch of
-    insert/update/delete changes into a partitioned parquet target —
-    MERGE ... WHEN MATCHED DELETE for streams, the generalization of
-    `foreach_batch_upsert` to logs that carry deletes (Debezium-style
-    feeds). Each batch rewrites only its touched partitions
-    (sources.merge_table.cdc_merge_into_parquet), and replays are
-    idempotent, which is exactly the at-least-once delivery contract
-    foreachBatch gives you.
-    """
-    from ..sources.merge_table import cdc_merge_into_parquet
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        cdc_merge_into_parquet(
-            spark, target_path, batch_df, keys, partition_col, ts_col, op_col
-        )
-
-    return apply
 
 
 def foreach_batch_incremental_dedup(

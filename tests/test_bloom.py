@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from etl_oms_spark.operators.dedup import (
     bloom_decontamination,
     contamination_ids,
-    suggest_bloom_bits,
 )
 
 
@@ -78,17 +77,6 @@ def test_bloom_matched_counts_are_exact(spark):
     rows = bloom_decontamination(corpus, bench, k=2).collect()
     assert len(rows) == 1
     assert rows[0]["doc_id"] == 10 and rows[0]["n_matched_shingles"] == 2
-
-
-def test_suggest_bloom_bits():
-    m, h = suggest_bloom_bits(1_000_000, fpp=0.01)
-    assert m % 64 == 0
-    # ~9.59 bits/item at 1% fpp, ~7 hashes
-    assert 9.0 < m / 1_000_000 < 10.5
-    assert h == 7
-    # degenerate input never returns zero-size
-    m0, h0 = suggest_bloom_bits(0)
-    assert m0 >= 64 and h0 >= 1
 
 
 def test_spark_runtime_bloom_filter_injection(spark, sf_dir):

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from etl_oms_spark.operators.classifier import (
     W_SCALE,
-    classifier_filter,
     hashed_term_counts,
     linear_scores,
     synthetic_weights,
@@ -65,16 +64,3 @@ def test_linear_scores_partitioning_invariant(spark):
         for r in linear_scores(df.repartition(11), w, 256).collect()
     )
     assert a == b
-
-
-def test_classifier_filter_threshold(spark):
-    df = spark.createDataFrame(
-        [(i, f"tok{i}") for i in range(30)], ["doc_id", "text"]
-    )
-    w = synthetic_weights(spark, n_buckets=64)
-    scores = {r.doc_id: r.margin_q for r in linear_scores(df, w, 64).collect()}
-    kept = classifier_filter(df, w, min_margin_q=0, n_buckets=64)
-    assert {r.doc_id for r in kept.collect()} == {
-        d for d, m in scores.items() if m > 0
-    }
-    assert kept.columns == df.columns

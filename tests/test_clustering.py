@@ -9,7 +9,6 @@ from etl_oms_spark.operators.clustering import (
     SHIFT,
     kmeans_assign,
     kmeans_fit,
-    semantic_dedup,
     semantic_dedup_pairs,
 )
 
@@ -92,14 +91,6 @@ def test_semantic_dedup_prunes_within_clusters(emb):
     got = pairs.limit(50).collect()
     assert all(r["id_a"] < r["id_b"] for r in got)
     assert all(r["cosine"] >= 0.3 for r in got)
-    kept = semantic_dedup(emb, k=4, n_iter=1, threshold=0.3)
-    n_kept = kept.count()
-    assert 0 < n_kept <= emb.count()
-    # survivors contain the min id of every pruned pair's cluster-chain
-    victims = {r["id_b"] for r in pairs.select("id_b").distinct().collect()}
-    kept_ids = {r["vec_id"] for r in kept.select("vec_id").collect()}
-    assert kept_ids.isdisjoint(victims)
-    assert kept_ids | victims == {r["vec_id"] for r in emb.select("vec_id").collect()}
 
 
 def test_cluster_stats_consistency(emb):
@@ -122,17 +113,6 @@ def test_cluster_stats_consistency(emb):
         )
         assert s["n_outliers"] == expect_out
     assigned.unpersist()
-
-
-def test_prune_outliers_drops_flagged_rows_only(emb):
-    from etl_oms_spark.operators.clustering import cluster_stats, prune_outliers
-
-    cents = kmeans_fit(emb, k=4, n_iter=2)
-    stats = cluster_stats(kmeans_assign(emb, cents)).collect()
-    total_out = sum(r["n_outliers"] for r in stats)
-    kept = prune_outliers(emb, k=4, n_iter=2)
-    assert kept.count() == emb.count() - total_out
-    assert kept.columns == emb.columns
 
 
 def test_kmeans_assign_join_path_matches_inline(emb):

@@ -268,17 +268,3 @@ def test_label_propagation_spreads_and_pins_seeds(spark):
     got2 = {r["id"]: r["label"]
             for r in label_propagation(edges.repartition(3), seeds).collect()}
     assert got2 == got
-
-
-def test_build_neardup_graph_matches_direct(spark, sf_dir):
-    from etl_oms_spark.operators.dedup import lsh_candidate_pairs, minhash_signatures
-    from etl_oms_spark.operators.graph import build_neardup_graph
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    g = build_neardup_graph(docs, hash_method="md5", persist=False)
-    direct = lsh_candidate_pairs(
-        minhash_signatures(docs, hash_method="md5"), hash_method="md5"
-    )
-    a = {(r["id_a"], r["id_b"]) for r in g.collect()}
-    b = {(r["id_a"], r["id_b"]) for r in direct.collect()}
-    assert a == b and a

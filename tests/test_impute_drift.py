@@ -43,18 +43,6 @@ def test_impute_global_median(spark):
     assert out.count() == 6
 
 
-def test_schema_drift_report(spark):
-    from etl_oms_spark.schema import schema_drift_report
-
-    old = spark.createDataFrame([(1, "a", 1.0)], "id INT, name STRING, v DOUBLE")
-    new = spark.createDataFrame([(1, 2, "x")], "id INT, v INT, extra STRING")
-    got = schema_drift_report(old, new)
-    assert ("extra", "added", None, "string") in got
-    assert ("name", "removed", "string", None) in got
-    assert ("v", "type_changed", "double", "int") in got
-    assert not [g for g in got if g[0] == "id"]
-
-
 def test_plan_stats_counts(spark, sf_dir):
     from etl_oms_spark.util import plan_stats
 
@@ -68,15 +56,3 @@ def test_plan_stats_counts(spark, sf_dir):
     n = spark.read.parquet(f"{sf_dir}/nation.parquet")
     j = df.join(F.broadcast(n), df["l_suppkey"] == n["n_nationkey"])
     assert plan_stats(j)["broadcasts"] >= 1
-
-
-def test_schema_drift_report_accepts_stored_schema_list(spark):
-    """The expected schema can be a stored [(name, type)] list (e.g. from
-    a previous run's dtypes persisted to a registry) — no DataFrame
-    needed on the old side."""
-    from etl_oms_spark.schema import schema_drift_report
-
-    old = [("id", "int"), ("name", "string")]
-    new = spark.createDataFrame([(1, 1.0)], "id INT, name DOUBLE")
-    got = schema_drift_report(old, new)
-    assert got == [("name", "type_changed", "string", "double")]

@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 
 def test_pipeline_metrics_single_action(spark, tmp_path):
-    from etl_oms_spark.plans.instrument import PipelineMetrics, observed_write_parquet
+    from etl_oms_spark.plans.instrument import PipelineMetrics
 
     stages = PipelineMetrics()
     raw = spark.range(100).select(
@@ -14,7 +14,8 @@ def test_pipeline_metrics_single_action(spark, tmp_path):
     )
     df = stages.observe(raw, "ingested", v_total=F.sum("v"))
     filtered = stages.observe(df.filter(F.col("k") < 5), "post_filter")
-    report = observed_write_parquet(filtered, str(tmp_path / "out"), stages)
+    filtered.write.parquet(str(tmp_path / "out"))
+    report = stages.report()
     assert report["ingested"]["rows"] == 100
     assert report["ingested"]["v_total"] == sum(i * 2 for i in range(100))
     assert report["post_filter"]["rows"] == 50

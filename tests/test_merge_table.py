@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from etl_oms_spark.sources.merge_table import (
     cdc_merge_into_parquet,
-    compact_partitions,
     merge_into_parquet,
     refresh_aggregate,
 )
@@ -49,22 +48,6 @@ def test_merge_into_parquet_idempotent(spark, tmp_path):
     merge_into_parquet(spark, target, batch, keys=["id", "day"], partition_col="day")
     df = spark.read.parquet(target)
     assert df.count() == 2
-
-
-def test_compact_partitions(spark, tmp_path):
-    target = str(tmp_path / "compact")
-    # accrete several small files per partition
-    for i in range(4):
-        _batch(spark, [(i * 10 + 1, "d1", i), (i * 10 + 2, "d2", i)]).repartition(3) \
-            .write.partitionBy("day").mode("append").parquet(target)
-    d1_dir = os.path.join(target, "day=d1")
-    n_before = len([f for f in os.listdir(d1_dir) if f.endswith(".parquet")])
-    assert n_before >= 4
-    before = spark.read.parquet(target).count()
-    compact_partitions(spark, target, "day")
-    n_after = len([f for f in os.listdir(d1_dir) if f.endswith(".parquet")])
-    assert n_after == 1
-    assert spark.read.parquet(target).count() == before
 
 
 def test_merge_partition_pruning_plan(spark, tmp_path):
@@ -145,27 +128,6 @@ def test_cdc_merge_empties_whole_partition(spark, tmp_path):
     assert {r["id"] for r in spark.read.parquet(target).collect()} == {1}
 
 
-def test_vacuum_table_removes_debris_keeps_data(spark, tmp_path):
-    import os
-
-    from etl_oms_spark.sources.merge_table import vacuum_table
-
-    path = str(tmp_path / "t")
-    spark.range(10).selectExpr("id", "id % 2 AS p").write.partitionBy(
-        "p"
-    ).parquet(path)
-    # simulate an aborted write + an emptied partition
-    os.makedirs(os.path.join(path, "_temporary", "0"), exist_ok=True)
-    os.makedirs(os.path.join(path, "p=9"), exist_ok=True)
-
-    stats = vacuum_table(path)
-    assert stats["temp_dirs"] == 1 and stats["empty_dirs"] >= 1
-    assert not os.path.exists(os.path.join(path, "_temporary"))
-    assert not os.path.exists(os.path.join(path, "p=9"))
-    # committed data intact
-    assert spark.read.parquet(path).count() == 10
-
-
 _MODE = "spark.sql.sources.partitionOverwriteMode"
 
 
@@ -200,10 +162,6 @@ def _refresh(spark, target):
     )
 
 
-def _compact(spark, target):
-    compact_partitions(spark, target, "day")
-
-
 @pytest.mark.parametrize("before", [None, "STATIC"])
 @pytest.mark.parametrize(
     "call, setup",
@@ -212,9 +170,8 @@ def _compact(spark, target):
         (_second_merge, _first_merge),
         (_cdc_merge, _cdc_merge),
         (_refresh, _refresh),
-        (_compact, _first_merge),
     ],
-    ids=["merge_first", "merge_second", "cdc", "refresh_aggregate", "compact"],
+    ids=["merge_first", "merge_second", "cdc", "refresh_aggregate"],
 )
 def test_write_path_leaves_overwrite_mode_alone(spark, tmp_path, call, setup, before):
     """Every upsert writes with dynamic overwrite as a WRITE option: the

@@ -192,104 +192,23 @@ def test_catalog_sql_surface(spark, sf_dir):
     assert ts_type == "timestamp"
 
 
-def test_read_csv_robust_quarantine(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from etl_oms_spark.sources.readers import read_csv_robust, split_corrupt
-
-    p = tmp_path / "dirty.csv"
-    p.write_text(
-        "country,date,confirmed\n"
-        "France,2020-03-01,100\n"
-        'Germany,2020-03-02,"unclosed\n'  # malformed: unclosed quote
-        "Spain,2020-03-03,50\n"
-    )
-    schema = T.StructType([
-        T.StructField("country", T.StringType()),
-        T.StructField("date", T.StringType()),
-        T.StructField("confirmed", T.LongType()),
-    ])
-    df = read_csv_robust(spark, str(p), schema=schema)
-    clean, bad = split_corrupt(df)
-    assert clean.count() == 2
-    assert {r["country"] for r in clean.collect()} == {"France", "Spain"}
-    assert bad.count() == 1  # quarantined, raw text preserved
-    assert "unclosed" in bad.first()["_corrupt_record"]
-
-
 def test_read_write_any_roundtrip(spark, tmp_path):
     from etl_oms_spark.sources.readers import read_any
-    from etl_oms_spark.sources.writers import write_any
 
     df = spark.createDataFrame(
         [(1, "a", 1.5), (2, "b", 2.5)], "id long, s string, v double"
     )
     for fmt in ("csv", "json", "parquet", "orc"):
         path = str(tmp_path / f"rt_{fmt}")
-        write_any(df, path, fmt=fmt)
+        df.write.options(header=True).format(fmt).save(path)
         back = read_any(spark, path, fmt=fmt)
         rows = sorted((r["id"], r["s"], r["v"]) for r in back.collect())
         assert rows == [(1, "a", 1.5), (2, "b", 2.5)], fmt
     # partitioned columnar layout prunes by partition column
     ppath = str(tmp_path / "rt_part")
-    write_any(df, ppath, fmt="orc", partition_by=["s"])
+    df.write.partitionBy("s").orc(ppath)
     pruned = read_any(spark, ppath, fmt="orc").filter("s = 'a'")
     assert pruned.count() == 1
-
-
-def test_read_csv_tolerant_quarantines_bad_rows(spark, tmp_path):
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from etl_oms_spark.sources.readers import read_csv_robust
-
-    p = tmp_path / "dirty.csv"
-    p.write_text(
-        "country,confirmed\n"
-        "France,100\n"
-        "Spain,not_a_number\n"
-        "Italy,50\n"
-    )
-    schema = T.StructType(
-        [
-            T.StructField("country", T.StringType()),
-            T.StructField("confirmed", T.LongType()),
-        ]
-    )
-    df = read_csv_robust(spark, str(p), schema=schema).cache()
-    good = df.filter(F.col("_corrupt_record").isNull())
-    bad = df.filter(F.col("_corrupt_record").isNotNull())
-    assert {r["country"]: r["confirmed"] for r in good.collect()} == {
-        "France": 100,
-        "Italy": 50,
-    }
-    bad_rows = bad.collect()
-    assert len(bad_rows) == 1 and "not_a_number" in bad_rows[0]["_corrupt_record"]
-    df.unpersist()
-
-
-def test_write_sorted_parquet_global_order(spark, tmp_path):
-    import glob as globmod
-
-    from etl_oms_spark.sources.writers import write_sorted_parquet
-
-    target = str(tmp_path / "sorted")
-    df = spark.createDataFrame([(v,) for v in range(1000)], "x LONG").repartition(13)
-    write_sorted_parquet(df, target, ["x"], n_files=4)
-
-    files = sorted(globmod.glob(target + "/part-*.parquet"))
-    assert len(files) == 4
-    prev_max = None
-    total = 0
-    for f in files:
-        vals = [r["x"] for r in spark.read.parquet(f).collect()]
-        assert vals == sorted(vals)          # ordered within file
-        if prev_max is not None and vals:
-            assert vals[0] > prev_max        # disjoint, increasing ranges
-        if vals:
-            prev_max = vals[-1]
-        total += len(vals)
-    assert total == 1000
 
 
 def test_curate_single_frame_matches_two_frame(spark):
@@ -359,36 +278,6 @@ def test_write_json_records_row_count_gate(spark, tmp_path):
     assert not (tmp_path / "big.json").exists()
     write_json_records(df, out, max_rows=10)  # at the limit is allowed
     assert (tmp_path / "big.json").exists()
-
-
-def test_orc_roundtrip_with_schema_evolution(spark, tmp_path):
-    """ORC roundtrip incl. mergeSchema across evolving file schemas and
-    partition pruning on the partitioned layout."""
-    from etl_oms_spark.sources.readers import read_orc
-    from etl_oms_spark.sources.writers import write_orc
-
-    p = str(tmp_path / "orc1")
-    df = spark.createDataFrame(
-        [(1, "a", 2.0), (2, "b", 3.0)], "id long, tag string, v double"
-    )
-    write_orc(df, p, partition_by=["tag"])
-    back = read_orc(spark, p)
-    assert {tuple(sorted(r.asDict().items())) for r in back.collect()} == {
-        tuple(sorted(r.asDict().items())) for r in df.collect()
-    }
-
-    # second write adds a column; mergeSchema reconciles
-    p2 = str(tmp_path / "orc2")
-    write_orc(df.select("id", "v"), p2, mode="overwrite")
-    write_orc(
-        spark.createDataFrame([(3, 4.0, "x")], "id long, v double, extra string"),
-        p2,
-        mode="append",
-    )
-    merged = read_orc(spark, p2, merge_schema=True)
-    assert set(merged.columns) == {"id", "v", "extra"}
-    assert merged.count() == 3
-    assert merged.filter("extra IS NOT NULL").count() == 1
 
 
 def test_empty_frames_have_no_partitions(spark, tmp_path):

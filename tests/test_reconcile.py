@@ -7,11 +7,9 @@ from pyspark.sql import functions as F
 from etl_oms_spark.reconcile import (
     apply_flexible_mapping,
     build_rename_map,
-    complete_missing_columns,
     disease_from_name,
     normalize_column_name,
     reconcile,
-    v3_defaults,
 )
 
 
@@ -53,15 +51,6 @@ def test_apply_flexible_mapping_and_completion(spark):
     assert row["confirmed"] == 10
     assert row["new_deaths"] is None
     assert row["pandemic"] == "COVID-19"
-
-
-def test_v3_default_completion(spark):
-    df = spark.createDataFrame([(5,)], ["confirmed"])
-    out = complete_missing_columns(df, defaults=v3_defaults())
-    row = out.first()
-    assert row["country"] == "Unknown"
-    assert row["new_cases"] == 0
-    assert row["date"] is not None  # current_timestamp default
 
 
 def test_disease_from_name(spark):

@@ -4,11 +4,7 @@ from __future__ import annotations
 
 import datetime
 
-from etl_oms_spark.operators.rollup import (
-    refresh_rollup,
-    time_rollup,
-    with_avg,
-)
+from etl_oms_spark.operators.rollup import refresh_rollup, time_rollup
 
 
 def _events(spark, day, n=4):
@@ -33,12 +29,6 @@ def test_hierarchical_tiers_lossless(spark):
     assert day == {1: (4, 1000), 2: (4, 1000)}
     hours = tiers["1 hour"].collect()
     assert len(hours) == 8 and all(r["n_events"] == 1 for r in hours)
-
-
-def test_with_avg_derivation(spark):
-    ev = _events(spark, 1)
-    day = time_rollup(ev, ["1 day"], keys=["event_type"])["1 day"]
-    assert with_avg(day).first()["avg_value"] == 2.5  # mean of 1..4
 
 
 def test_refresh_rollup_incremental(spark, tmp_path):

@@ -580,32 +580,6 @@ def test_runs_test_alternating_maximal_runs(spark):
     assert got["n_below"] == 0 and got["z_q6"] == 0
 
 
-# -------------------------------------------------- fused monitors
-def test_fused_monitors_equal_standalone_queries(spark):
-    """The adopted shared-harness streaming path (streaming/monitors.
-    fused_value_histogram_monitors — ONE (day, value)-histogram stream
-    feeding both rollups) must return bit-identical results to the
-    UNCHANGED standalone sps1/scs1 contract queries."""
-    import __spark_entry__ as entry_mod
-    from etl_oms_spark.streaming.monitors import (
-        fused_value_histogram_monitors,
-    )
-    from pyspark.sql import functions as F
-
-    ev = entry_mod._events(spark, SF).select(
-        "ts", entry_mod._cents(F.col("value")).alias("cents")
-    )
-    psi, cusum = fused_value_histogram_monitors(spark, ev)
-    ref_psi = entry_mod.sps1_streaming_psi(spark, SF)
-    ref_cusum = entry_mod.scs1_streaming_cusum(spark, SF)
-    assert [r.asDict() for r in psi.collect()] == [
-        r.asDict() for r in ref_psi.collect()
-    ]
-    assert [r.asDict() for r in cusum.collect()] == [
-        r.asDict() for r in ref_cusum.collect()
-    ]
-
-
 # ------------------------------------------------------------- lev1
 def test_brown_forsythe_vs_direct(spark):
     from etl_oms_spark.operators.classifier import brown_forsythe_from_hist

@@ -4,11 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from etl_oms_spark.operators.sampling import (
-    deterministic_sample,
-    stratified_sample,
-    train_test_split,
-)
+from etl_oms_spark.operators.sampling import stratified_sample, train_test_split
 
 
 def _docs(spark):
@@ -31,17 +27,6 @@ def test_split_disjoint_exhaustive_stable(spark):
     # different salt → different split
     train3, _ = train_test_split(df, test_rate=0.2, key_col="doc_id", salt="other")
     assert train3.exceptAll(train).count() > 0
-
-
-def test_deterministic_sample_rate_and_key_consistency(spark):
-    df = _docs(spark).withColumn("row", F.monotonically_increasing_id())
-    # key-level sampling: duplicate each doc_id; both copies must co-move
-    both = df.union(df)
-    sampled = deterministic_sample(both, 0.3, key_col="doc_id")
-    n = sampled.count()
-    assert 0.2 * 4000 < n < 0.4 * 4000
-    per_key = sampled.groupBy("doc_id").count()
-    assert per_key.filter(F.col("count") != 2).count() == 0  # all-or-nothing per key
 
 
 def test_stratified_sample(spark):
@@ -87,9 +72,7 @@ def test_stratified_sample_md5_portable(spark):
 
 
 def test_curate_documents_end_to_end(spark, sf_dir):
-    import os
-
-    from etl_oms_spark.plans.training_pipeline import curate_documents, write_curated
+    from etl_oms_spark.plans.training_pipeline import curate_documents
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     train, test = curate_documents(
@@ -106,13 +89,6 @@ def test_curate_documents_end_to_end(spark, sf_dir):
         docs, min_tokens=20, near_dup_threshold=0.7, test_rate=0.1
     )
     assert train2.select("doc_id").exceptAll(train.select("doc_id")).count() == 0
-
-    out = str(spark._sc._temp_dir) + "/curated"
-    write_curated(train, test, out)
-    layout = set(os.listdir(out))
-    assert any(d.startswith("split=") for d in layout)
-    back = spark.read.parquet(out)
-    assert back.count() == n_train + n_test
 
 
 def test_md5_split_portable_and_disjoint(spark):

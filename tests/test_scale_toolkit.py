@@ -9,7 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from etl_oms_spark.sources.writers import write_bucketed_table, write_parquet
+from etl_oms_spark.sources.writers import write_bucketed_table
 from etl_oms_spark.util import physical_plan, salted_join
 
 
@@ -25,7 +25,7 @@ def test_filter_pushdown_and_pruning(spark, sf_dir):
 def test_partition_pruning(spark, tmp_path):
     df = spark.range(1000).withColumn("part", (F.col("id") % 10).cast("int"))
     path = str(tmp_path / "parted")
-    write_parquet(df, path, partition_by=["part"])
+    df.write.partitionBy("part").parquet(path)
     q = spark.read.parquet(path).filter(F.col("part") == 3)
     plan = physical_plan(q)
     assert "PartitionFilters: [isnotnull(part" in plan

@@ -117,19 +117,6 @@ def test_hopping_window_membership(spark):
     assert all(r["n_events"] == 1 and r["sum_value"] == 1.0 for r in out)
 
 
-def test_read_binary_dir(spark, tmp_path):
-    from etl_oms_spark.sources.readers import read_binary_dir
-
-    (tmp_path / "a.png").write_bytes(b"\x89PNG" + b"x" * 10)
-    (tmp_path / "b.png").write_bytes(b"\x89PNG" + b"y" * 1000)
-    (tmp_path / "c.txt").write_text("not a png")
-    df = read_binary_dir(spark, str(tmp_path), glob="*.png", max_bytes=100)
-    rows = df.collect()
-    assert len(rows) == 1
-    assert rows[0]["path"].endswith("a.png")
-    assert bytes(rows[0]["content"]).startswith(b"\x89PNG")
-
-
 def test_profile_columns_awkward_names(spark):
     """Column names with spaces, hyphens, quotes and reserved words must
     survive the generated stack()/CAST SQL (backquoted identifiers,

@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from etl_oms_spark.operators.multimodal import (
     decode_media_metadata,
     extract_features,
-    frame_sample_plan,
     make_fake_payload,
     with_media_column,
 )
@@ -136,14 +135,6 @@ def test_extract_features_shape_and_determinism(spark):
     assert abs(sum(feats[1]) - 1.0) < 1e-6  # normalized histogram
 
 
-def test_frame_sample_fanout(spark):
-    # 64-byte body → 4 fake frames; every_n=2 → frames 0 and 2
-    payload = b"FAKE" + (0).to_bytes(4, "big") + (0).to_bytes(4, "big") + bytes([3]) + bytes(64)
-    df = spark.createDataFrame([(7, payload)], "doc_id long, payload binary")
-    out = frame_sample_plan(df, every_n=2).collect()
-    assert [(r["doc_id"], r["frame_index"]) for r in out] == [(7, 0), (7, 2)]
-
-
 def test_with_media_column_roundtrip(spark):
     df = spark.createDataFrame([(1, "hello world")], "doc_id long, text string")
     out = decode_media_metadata(with_media_column(df)).first()
@@ -176,27 +167,6 @@ def test_ivf_assign_and_topk(spark, sf_dir):
     exact = {r["vec_id"] for r in cosine_topk(emb, q, k=5).collect()}
     full = {r["vec_id"] for r in ivf_topk(emb, q, cents, k=5, n_probe=8).collect()}
     assert full == exact
-
-
-def test_resize_media_rewrites_header_and_samples_body(spark):
-    from etl_oms_spark.operators.multimodal import resize_media
-
-    payloads = [(1, make_fake_payload(640, 480, 3)), (2, b"not-a-media"), (3, None)]
-    df = spark.createDataFrame(payloads, "doc_id long, payload binary")
-    out = {r["doc_id"]: r["payload"] for r in resize_media(df, 4, 4).collect()}
-    resized = bytes(out[1])
-    # header rewritten to target dims, channels preserved
-    assert resized[:4] == b"FAKE"
-    assert int.from_bytes(resized[4:8], "big") == 4
-    assert int.from_bytes(resized[8:12], "big") == 4
-    assert resized[12] == 3
-    assert len(resized) == 13 + 16  # 4x4 body
-    # deterministic nearest-neighbor: resizing twice gives identical bytes
-    again = {r["doc_id"]: r["payload"] for r in resize_media(df, 4, 4).collect()}
-    assert bytes(again[1]) == resized
-    # undecodable / null payloads pass through untouched
-    assert bytes(out[2]) == b"not-a-media"
-    assert out[3] is None
 
 
 def test_ivf_centroid_seed_uses_takeordered(spark, sf_dir):
@@ -367,31 +337,3 @@ def test_suggest_num_planes_scale_rule():
     for n in (1_000, 50_000, 10**7):
         p = suggest_num_planes(n)
         assert n / (2 ** p) <= 256
-
-
-def test_extract_features_arrow_bit_parity(spark):
-    """mapInArrow twin must be BIT-identical to the mapInPandas path,
-    including NULL and empty payloads."""
-    from etl_oms_spark.operators.multimodal import (
-        extract_features,
-        extract_features_arrow,
-        make_fake_payload,
-    )
-
-    rows = [
-        (1, make_fake_payload(4, 4)),
-        (2, make_fake_payload(2, 8, channels=1)),
-        (3, b""),
-        (4, None),
-        (5, bytes(range(256))),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    a = {r["doc_id"]: r["features"] for r in extract_features(df).collect()}
-    b = {r["doc_id"]: r["features"] for r in extract_features_arrow(df).collect()}
-    assert set(a) == set(b) == {1, 2, 3, 4, 5}
-    for k in a:
-        assert a[k] == b[k], (k, a[k], b[k])  # exact float32 equality
-    # empty/NULL payloads give the all-zero vector
-    assert a[3] == [0.0] * 16 and a[4] == [0.0] * 16
-    # uniform byte coverage gives the uniform histogram
-    assert b[5] == [1.0 / 16] * 16

@@ -120,31 +120,6 @@ def test_dedup_stream_drops_replays(spark, tmp_path):
         q.stop()
 
 
-def test_enrich_stream_static_join(spark, tmp_path):
-    from etl_oms_spark.streaming.events import enrich_stream
-
-    src = tmp_path / "enrich_src"
-    src.mkdir()
-    _write_events_json(src / "b1.json", EVENTS)
-    dim = spark.createDataFrame(
-        [(1, "alice"), (2, "bob")], "user_id long, user_name string"
-    )
-    stream = stream_events(spark, str(src))
-    q = (
-        enrich_stream(stream, dim, "user_id")
-        .select("event_id", "user_name")
-        .writeStream.format("memory").queryName("enrich_out")
-        .outputMode("append").start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = {r["event_id"]: r["user_name"]
-                for r in spark.sql("SELECT * FROM enrich_out").collect()}
-        assert rows == {1: "alice", 2: "alice", 3: "bob"}
-    finally:
-        q.stop()
-
-
 def test_join_streams_interval_attribution(spark, tmp_path):
     from etl_oms_spark.streaming.events import join_streams
 
@@ -294,57 +269,6 @@ def test_streaming_hopping_windows(spark, tmp_path):
         assert got[23] == (2, 3.0)
     finally:
         q.stop()
-
-
-def test_foreach_batch_cdc_stream(spark, tmp_path):
-    """Streaming CDC: I/U/D micro-batches land in a partitioned parquet
-    target with delete semantics, idempotent per batch."""
-    from etl_oms_spark.streaming.events import foreach_batch_cdc
-
-    src = tmp_path / "cdc_src"
-    src.mkdir()
-    target = str(tmp_path / "cdc_target")
-
-    def write_batch(name, rows):
-        _write_events_json(src / name, rows)
-
-    write_batch("b1.json", [
-        {"id": 1, "part": "p0", "ts": "2024-01-01T00:00:00Z", "op": "I", "v": 10},
-        {"id": 2, "part": "p0", "ts": "2024-01-01T00:00:00Z", "op": "I", "v": 20},
-    ])
-    stream = (
-        spark.readStream.schema("id INT, part STRING, ts TIMESTAMP, op STRING, v INT")
-        .json(str(src))
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            foreach_batch_cdc(target, ["id"], spark, "part")
-        )
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    def read():
-        return {r["id"]: (r["op"], r["v"]) for r in spark.read.parquet(target).collect()}
-
-    assert read() == {1: ("I", 10), 2: ("I", 20)}
-
-    write_batch("b2.json", [
-        {"id": 1, "part": "p0", "ts": "2024-01-02T00:00:00Z", "op": "U", "v": 11},
-        {"id": 2, "part": "p0", "ts": "2024-01-02T00:00:00Z", "op": "D", "v": 0},
-    ])
-    q = (
-        stream.writeStream.foreachBatch(
-            foreach_batch_cdc(target, ["id"], spark, "part")
-        )
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert read() == {1: ("U", 11)}
 
 
 def test_streaming_sessionize(spark, tmp_path):
@@ -544,74 +468,3 @@ def test_click_purchase_pairs_stream_equals_batch(spark, tmp_path):
         for r in spark.read.parquet(str(out)).collect()
     )
     assert got == want
-
-
-def test_transform_with_state_running_totals(spark, tmp_path):
-    """Spark-4 transformWithStateInPandas: per-user ValueState totals
-    accumulate WITHIN a run and ACROSS restarts (checkpoint-durable
-    state) — the state-v2 successor of the applyInPandasWithState
-    profile operator, pinned end-to-end on the RocksDB provider.
-
-    The TWS state-API client speaks protobuf to the JVM state server;
-    protobuf is not installed in this sandbox, so the end-to-end run is
-    import-gated exactly like the PIL/transformers seams (the live-
-    tested in-sandbox twin is applyInPandasWithState above)."""
-    import pytest as _pytest
-
-    _pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState state client needs protobuf (not in sandbox)",
-    )
-
-    from etl_oms_spark.streaming.stateful_v2 import user_running_totals_stream
-
-    provider_conf = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(provider_conf, None)
-    src = tmp_path / "tws_src"
-    src.mkdir()
-    ckpt = str(tmp_path / "tws_ckpt")
-    try:
-        spark.conf.set(
-            provider_conf,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        _write_events_json(src / "w1.json", [
-            {"event_id": 1, "ts": "2024-01-01T00:00:00Z", "user_id": 1,
-             "event_type": "click", "value": 2.5, "props": "{}"},
-            {"event_id": 2, "ts": "2024-01-01T00:01:00Z", "user_id": 1,
-             "event_type": "view", "value": 1.5, "props": "{}"},
-            {"event_id": 3, "ts": "2024-01-01T00:02:00Z", "user_id": 2,
-             "event_type": "click", "value": 4.0, "props": "{}"}])
-
-        def run_wave(qname):
-            q = (
-                user_running_totals_stream(stream_events(spark, str(src)))
-                .writeStream.format("memory")
-                .queryName(qname)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            return {
-                r["user_id"]: (r["n_events"], r["value_sum"])
-                for r in spark.sql(f"SELECT * FROM {qname}").collect()
-            }
-
-        got1 = run_wave("tws_w1")
-        assert got1 == {1: (2, 4.0), 2: (1, 4.0)}
-
-        # restart with one more file: user 1's totals must CONTINUE
-        _write_events_json(src / "w2.json", [
-            {"event_id": 4, "ts": "2024-01-01T01:00:00Z", "user_id": 1,
-             "event_type": "purchase", "value": 10.0, "props": "{}"}])
-        got2 = run_wave("tws_w2")
-        assert got2[1] == (3, 14.0)  # 2+1 events, 4.0+10.0 across restarts
-        assert 2 not in got2  # untouched keys don't re-emit in Update mode
-    finally:
-        if old is None:
-            spark.conf.unset(provider_conf)
-        else:
-            spark.conf.set(provider_conf, old)
