@@ -13260,8 +13260,8 @@ def cpd1_change_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = cand.orderBy(F.col("stat").desc(), "t").limit(1)
     # change_date as an ISO string on BOTH engines: Spark DateType
     # reaches pandas as datetime.date objects while DuckDB DATE becomes
-    # datetime64 -- the driver hash is type-sensitive (dtype_audit
-    # flagged this pre-rotation, VERDICT r06 item 4).
+    # datetime64 -- the driver hash is type-sensitive (check.py's dtype
+    # rule; flagged pre-rotation, VERDICT r06 item 4).
     return top.select(
         F.col("d").cast("string").alias("change_date"),
         (F.col("t") + 1).cast("long").alias("days_before"),

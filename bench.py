@@ -4,6 +4,13 @@ Runs each headline query end-to-end (noop sink — full computation, no
 serialization/collect cost) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
 line: {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...},
 "sf": ...}.
+
+Usage: python bench.py [query ...]
+With no arguments it times the whole HEADLINE list; named queries (any
+``queries()`` entry, headline or not) are timed alone, in the order given.
+A 10x scale rehearsal is two runs on the same names, one per sf_dir, each
+with its own SPARK_GRAFT_BENCH_OUT, then
+``python tools/diff_bench.py base.json synth.json 10``.
 """
 
 from __future__ import annotations
@@ -242,8 +249,16 @@ def _cpu_jiffies() -> dict[str, int]:
     return dict(zip(fields, vals))
 
 
-def main() -> None:
+def main() -> int:
     import __spark_entry__ as entry_mod
+
+    qs = entry_mod.queries()
+    names = sys.argv[1:] or [n for n in HEADLINE if n in qs]
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        print(f"unknown query: {', '.join(unknown)}", file=sys.stderr)
+        return 2
+
     from etl_oms_spark.session import get_spark
 
     # sample BEFORE Spark spins up: the end-of-run loadavg_1m always
@@ -257,11 +272,9 @@ def main() -> None:
     spark = get_spark("bench", master=f"local[{cpus}]", shuffle_partitions=int(cpus))
     spark.sparkContext.setLogLevel("ERROR")
 
-    qs = entry_mod.queries()
-    names = [n for n in HEADLINE if n in qs]
-
-    # warm the JVM/session once so q1 doesn't pay session startup
-    qs[names[0]](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    # warm the JVM/session once so the first timed query doesn't pay
+    # session startup
+    qs[HEADLINE[0]](spark, sf_dir).write.format("noop").mode("overwrite").save()
 
     # 1 cold + 3 warm runs per query; report the MEDIAN of the warm runs.
     # The cold run pays one-time whole-stage-codegen/JIT compilation
@@ -271,6 +284,7 @@ def main() -> None:
     # changes, not load spikes (r3 verdict: single-shot timings produced
     # 10 phantom sub-second regressions under loadavg ~9).
     timings: dict[str, float] = {}
+    colds: dict[str, float] = {}
     cold_total = 0.0
     total = 0.0
     import gc
@@ -281,6 +295,7 @@ def main() -> None:
             t0 = time.perf_counter()
             qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
             runs.append(time.perf_counter() - t0)
+        colds[name] = round(runs[0], 3)
         cold_total += runs[0]
         dt = round(sorted(runs[1:])[1], 3)  # median of the 3 warm runs
         timings[name] = dt
@@ -333,6 +348,9 @@ def main() -> None:
     # r04/r05 ("parsed": null). The printed line keeps the contract
     # shape but includes only as many of the slowest queries as fit the
     # capture window; the full-dict file always holds the complete dict.
+    # Per-query cold times ("cold") go to the file only: the trim loop
+    # below drops queries, not other keys, so a second per-query dict on
+    # the line would crowd the warm medians out of it.
     #
     # Output-path provenance (VERDICT r12 item 2): the committed idle
     # record is bench_full.json, written ONLY when the run explicitly
@@ -349,7 +367,7 @@ def main() -> None:
         os.path.dirname(os.path.abspath(__file__)), out_name
     )
     with open(full_path, "w") as f:
-        json.dump(payload, f, indent=1, sort_keys=True)
+        json.dump({**payload, "cold": colds}, f, indent=1, sort_keys=True)
 
     slowest = sorted(timings.items(), key=lambda kv: (-kv[1], kv[0]))
     line = ""
@@ -362,7 +380,8 @@ def main() -> None:
         if len(line) <= 1800:
             break
     print(line)
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

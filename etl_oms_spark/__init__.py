@@ -41,8 +41,7 @@ Module map
 - sources.merge_table    partition-pruned parquet MERGE, CDC merge,
                          aggregate refresh
 - streaming.events       windows/watermarks, dedup-within-watermark,
-                         foreachBatch merge, applyInPandasWithState
-                         profiles
+                         foreachBatch merge
 - streaming.joins        stream-stream interval join (batch-twin exact)
 - catalog                temp-view registration + SQL surface
 - util                   parallelism guard, salted join, plan introspection

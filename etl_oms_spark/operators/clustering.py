@@ -238,7 +238,7 @@ def semantic_dedup_pairs(
     `_cosine_scored`). The cosine is bit-identical to `cosine_quantized`:
     identical integer operands, identical ``dot / (sqrt·sqrt)`` shape.
     """
-    from .similarity import _quant, dot_quantized, norm2_quantized
+    from .similarity import _quant, norm2_quantized
 
     cents = kmeans_fit(df, k, n_iter, id_col, vec_col)
     assigned = kmeans_assign(df, cents, id_col, vec_col)

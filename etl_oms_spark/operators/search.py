@@ -26,7 +26,7 @@ happens.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_oms_spark.operators.text import tokens

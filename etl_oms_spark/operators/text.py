@@ -435,26 +435,6 @@ def canonicalize_url(col: Column | str, drop_param_prefix: str = "utm_") -> Colu
     )
 
 
-def char_trigrams(col: Column | str) -> Column:
-    """Sliding character trigrams of the normalized text as
-    array<string> (empty for NULL/short text — sequence(1, n) with
-    n < 1 would generate a DESCENDING [1, 0] in Spark, so the guard is
-    load-bearing, not cosmetic). The normalized text is let_-bound
-    (util.let_): a subtree captured in the transform lambda would
-    re-run the normalize regex once per TRIGRAM (measured 6.5x on the
-    sf0.1 explode, round 11)."""
-    from etl_oms_spark.util import let_
-
-    def body(nt: Column) -> Column:
-        seq = F.sequence(F.lit(1), F.length(nt) - F.lit(2))
-        return F.when(
-            F.coalesce(F.length(nt), F.lit(0)) >= 3,
-            F.transform(seq, lambda i: F.substring(nt, i, 3)),
-        ).otherwise(F.array().cast("array<string>"))
-
-    return let_(normalize_text(col), body)
-
-
 def rank_langid_confusion(
     df: DataFrame,
     text_col: str = "text",
@@ -513,8 +493,8 @@ def rank_langid_confusion(
     # HOIST the canonical text into a projected ATTRIBUTE before the
     # trigram transform (round-11 plan audit): a transform lambda
     # re-evaluates its captured subtree PER ELEMENT, so inlining
-    # normalize_text into char_trigrams pays the whitespace regex once
-    # per TRIGRAM, not once per document — measured 6.5x on the sf0.1
+    # normalize_text into the trigram transform pays the whitespace regex
+    # once per TRIGRAM, not once per document — measured 6.5x on the sf0.1
     # explode (13.2s -> 2.0s; the prefix form's double normalization
     # made it 2x worse still). Spark does not collapse this projection
     # into the Generate's lambda.

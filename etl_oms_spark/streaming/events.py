@@ -215,58 +215,6 @@ def join_streams(
     )
 
 
-def stateful_user_profiles(stream_df: DataFrame) -> DataFrame:
-    """Custom stateful streaming operator via ``applyInPandasWithState``.
-
-    Maintains a per-user profile (event count, value total, first/last
-    event time) that persists across micro-batches — the class of operator
-    plain windowed aggregation cannot express when the state logic is
-    arbitrary Python. State is one tiny tuple per user; pair with a
-    watermark-driven timeout (here ProcessingTimeTimeout left NoTimeout for
-    simplicity) to bound state at scale.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = (
-        "user_id long, n_events long, total_value double, "
-        "first_ts timestamp, last_ts timestamp"
-    )
-    state_schema = "n long, total double, first_ts timestamp, last_ts timestamp"
-
-    def update(key, pdfs, state: GroupState):
-        (user_id,) = key
-        n, total = 0, 0.0
-        first_ts, last_ts = None, None
-        if state.exists:
-            n, total, first_ts, last_ts = state.get
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-            batch_min = pdf["ts"].min()
-            batch_max = pdf["ts"].max()
-            first_ts = batch_min if first_ts is None else min(first_ts, batch_min)
-            last_ts = batch_max if last_ts is None else max(last_ts, batch_max)
-        state.update((n, total, first_ts, last_ts))
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "n_events": [n],
-                "total_value": [total],
-                "first_ts": [first_ts],
-                "last_ts": [last_ts],
-            }
-        )
-
-    return stream_df.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def foreach_batch_incremental_dedup(
     corpus_path: str,
     ledger_path: str,

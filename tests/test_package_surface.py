@@ -40,10 +40,6 @@ LIBRARY_SURFACE = {
     "zorder_by": "README names measured data skipping",
     "make_fake_payload": "builds the FAKE media format that "
     "decode_media_metadata / extract_features parse",
-    "char_trigrams": "test-only: pins ct1p's trigram-volume premise; "
-    "deletion candidate (ROADMAP item 11)",
-    "stateful_user_profiles": "test-only applyInPandasWithState operator; "
-    "deletion candidate (ROADMAP item 11)",
 }
 
 _WORD = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
@@ -119,3 +115,36 @@ def test_library_surface_entries_are_unreached_defs():
     assert not stale, (
         f"now reached from a root, drop from LIBRARY_SURFACE: {stale}"
     )
+
+
+def _unused_imports(path: Path) -> list[str]:
+    """Names an import in ``path`` binds that no identifier in the module
+    reads. ``__future__`` imports and lines marked ``# noqa: F401`` (an
+    import kept only to probe that a dependency is installed) are exempt."""
+    source = path.read_text()
+    lines = source.splitlines()
+    tree = ast.parse(source)
+    used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    unused = []
+    for node in ast.walk(tree):
+        if not isinstance(node, (ast.Import, ast.ImportFrom)):
+            continue
+        if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+            continue
+        if "# noqa: F401" in lines[node.lineno - 1]:
+            continue
+        for alias in node.names:
+            bound = alias.asname or alias.name.split(".")[0]
+            if bound != "*" and bound not in used:
+                unused.append(f"{path.relative_to(REPO)}:{node.lineno} {bound}")
+    return unused
+
+
+def test_no_unused_imports():
+    unused = [
+        u
+        for path in sorted(PACKAGE.rglob("*.py"))
+        if path.name != "__init__.py"
+        for u in _unused_imports(path)
+    ]
+    assert not unused, f"unused imports in etl_oms_spark/: {unused}"

@@ -93,28 +93,3 @@ def test_eta1_is_one_scan_no_join(spark):
     plan = _plan(entry_mod.eta1_quality_by_source(spark, SF_DIR))
     assert plan.count("scan parquet") == 1
     assert "join" not in plan
-
-
-def test_ct1p_shrinks_the_trigram_explode(spark):
-    """The whole point of ct1p: the 400-char prefix must cut the
-    trigram volume well below full-document ct1's on real documents
-    (sf0.001 mean doc length ≈ 280 normalized chars means a modest cut
-    here; at sf0.1 lengths the shrink is larger — SCALING.md records
-    the measured wall-clock)."""
-    from pyspark.sql import functions as F
-
-    from etl_oms_spark.operators.text import char_trigrams, normalize_text
-
-    d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    full = d.select(
-        F.sum(F.size(char_trigrams("text"))).alias("n")
-    ).collect()[0]["n"]
-    pref = d.select(
-        F.sum(
-            F.size(
-                char_trigrams(F.substring(normalize_text("text"), 1, 400))
-            )
-        ).alias("n")
-    ).collect()[0]["n"]
-    assert pref < full
-    assert pref <= d.count() * 398  # hard per-doc bound from the prefix

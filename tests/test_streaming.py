@@ -212,38 +212,6 @@ def test_join_streams_left_outer_emits_after_watermark(spark, tmp_path):
         q.stop()
 
 
-def test_stateful_user_profiles(spark, tmp_path):
-    from etl_oms_spark.streaming.events import stateful_user_profiles
-
-    src = tmp_path / "state_src"
-    src.mkdir()
-    _write_events_json(src / "b1.json", EVENTS)  # u1: 2 events, u2: 1
-    stream = stream_events(spark, str(src), max_files_per_trigger=1)
-    q = (
-        stateful_user_profiles(stream)
-        .writeStream.format("memory").queryName("profiles")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "state_ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # second batch: user 1 returns → state must carry over
-        _write_events_json(src / "b2.json", [
-            {"event_id": 7, "ts": "2024-01-01T02:00:00Z", "user_id": 1,
-             "event_type": "click", "value": 10.0, "props": "{}"}])
-        q.processAllAvailable()
-        rows = spark.sql(
-            "SELECT * FROM profiles WHERE user_id = 1 ORDER BY n_events DESC LIMIT 1"
-        ).collect()
-        r = rows[0]
-        assert r["n_events"] == 3  # 2 from batch 1 + 1 from batch 2
-        assert r["total_value"] == 13.0  # 1 + 2 + 10
-        assert r["first_ts"].minute == 10 and r["last_ts"].hour == 2
-    finally:
-        q.stop()
-
-
 def test_streaming_hopping_windows(spark, tmp_path):
     """hopping_window_counts is streaming-ready as-is: the same F.window
     (width, slide) aggregation runs under readStream with a watermark,

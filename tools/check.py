@@ -4,7 +4,11 @@ Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
 DuckDB at the given sf_dir, then compares row count, sorted column names,
 and cell values (exact for non-floats; floats must match bit-exactly, with
 the max abs diff reported when they don't — if a float column shows ~1e-9
-drift, the query needs the exact-integer aggregation treatment).
+drift, the query needs the exact-integer aggregation treatment), and the
+pandas dtype of every column: the driver's result hash is type-sensitive,
+so long-vs-double or HUGEINT drift fails even when every value matches.
+datetime64 units (ns vs us) count as equal because the driver normalizes
+datetimes before hashing.
 
 Usage: python tools/check.py [sf_dir] [query ...]
 """
@@ -37,7 +41,24 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns), na_position="first").reset_index(drop=True)
 
 
+def dtypes(df: pd.DataFrame) -> dict[str, str]:
+    return {c: str(df[c].dtype) for c in sorted(df.columns)}
+
+
+def dtype_problems(sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
+    def unit_free(t: str) -> str:
+        return "datetime64" if t.startswith("datetime64") else t
+
+    sdt, odt = dtypes(sdf), dtypes(odf)
+    return [
+        f"col {c}: dtype spark={sdt[c]} oracle={odt[c]}"
+        for c in sdt
+        if c in odt and unit_free(sdt[c]) != unit_free(odt[c])
+    ]
+
+
 def compare(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
+    """Value problems first, then dtype problems; [] when both sides agree."""
     problems = []
     if len(sdf) != len(odf):
         return [f"rowcount spark={len(sdf)} oracle={len(odf)}"]
@@ -70,7 +91,7 @@ def compare(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
                     f"col {c}: {(~eq).sum()} mismatches, first at row {i}: "
                     f"spark={a.iloc[i]!r} oracle={b.iloc[i]!r}"
                 )
-    return problems
+    return problems + dtype_problems(sdf, odf)
 
 
 def main() -> int:
@@ -145,14 +166,19 @@ def main() -> int:
             failures += 1
             continue
         problems = compare(name, sdf, odf)
+        types = {"spark_dtypes": dtypes(sdf), "oracle_dtypes": dtypes(odf)}
         if problems:
             failures += 1
             print(f"FAIL {name}: " + "; ".join(problems))
-            results[name] = {"status": "mismatch", "detail": "; ".join(problems)[:500]}
+            only_dtypes = problems == dtype_problems(sdf, odf)
+            results[name] = {
+                "status": "dtype_mismatch" if only_dtypes else "mismatch",
+                "detail": "; ".join(problems)[:500], **types,
+            }
         else:
             print(f"ok   {name}: rows={len(sdf)} [{time.time()-t0:.1f}s]")
             results[name] = {"status": "exact_match", "rows": len(sdf),
-                             "secs": round(time.time() - t0, 1)}
+                             "secs": round(time.time() - t0, 1), **types}
     gc.collect()
     print(f"\n{'ALL OK' if failures == 0 else f'{failures} FAILURES'}")
     if json_path:

@@ -1,7 +1,9 @@
 #!/usr/bin/env bash
 # Full verification battery — the round-closing practice in one command:
-#   pytest, then full oracle sweeps at sf0.001 / sf0.01 / sf0.1, plus the
-#   whole-surface partitioning-invariance pass (CHECK_SHUFFLE=3).
+#   pytest (the repo's tests, then perfbench's pure tests), then full
+#   oracle sweeps at sf0.001 / sf0.01 / sf0.1, plus the whole-surface
+#   partitioning-invariance pass (CHECK_SHUFFLE=3). Each sweep checks
+#   values and output dtypes in one pass (tools/check.py).
 # Usage: bash tools/sweep.sh [outdir=/tmp/sweep]
 # Exits non-zero on the first failing stage; logs land in $outdir.
 set -u
@@ -19,6 +21,7 @@ run() {
 }
 
 run pytest python -m pytest tests/ -x -q
+run perfbench python -m pytest perfbench/tests -q
 # CHECK_JSON: each sweep stage persists a machine-readable artifact so
 # the green evidence is auditable after the fact (ADVICE r05) — copy
 # $OUT/sweep_*.json into the repo at round close.
@@ -26,11 +29,7 @@ run sf0001 env CHECK_JSON="$OUT/sweep_sf0001.json" python tools/check.py /root/t
 run sf001  env CHECK_JSON="$OUT/sweep_sf001.json" python tools/check.py /root/testdata/sf0.01
 run inv    env CHECK_SHUFFLE=3 CHECK_JSON="$OUT/sweep_inv.json" python tools/check.py /root/testdata/sf0.01
 run sf01   env CHECK_JSON="$OUT/sweep_sf01.json" python tools/check.py /root/testdata/sf0.1
-# dtype parity: the driver hash is TYPE-sensitive; value-level checks
-# above cannot see long-vs-double / HUGEINT drift (r06 rc1 red).
-run dtype  env DTYPE_JSON="$OUT/sweep_dtype.json" python tools/dtype_audit.py /root/testdata/sf0.01
 for f in sf0001 sf001 inv sf01; do
   if grep -q FAIL "$OUT/$f.log"; then echo "FAILURES in $f"; exit 1; fi
 done
-if ! grep -q "ALL DTYPES OK" "$OUT/dtype.log"; then echo "DTYPE MISMATCHES"; exit 1; fi
 echo "BATTERY GREEN"
